@@ -92,7 +92,7 @@ _SQL_BUCKETS = (
     )
 )
 
-# bucket cap mirrors pipeline.doc_candidate_pairs bucket_cap=1000: first
+# bucket cap mirrors pipeline.DOC_BUCKET_CAP=1000: first
 # 1000 ids per (band, bucket) before the pair self-join
 _SQL_BUCKETS_CAPPED = (
     "SELECT doc_id, band, bucket FROM buckets0 "

@@ -28,6 +28,17 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import (
+    DOC_THRESHOLD,
+    ERConfig,
+    _doc_stage_graph,
+    _DocPrior,
+    _er_stage_results,
+    cluster_from_blocks,
+    resolve_documents,
+    resolve_entities,
+)
+
 
 def _lineage_path(ledger_dir: str, stage: str) -> Path:
     return Path(ledger_dir) / stage / "_lineage.json"
@@ -196,6 +207,16 @@ def _read_complete(spark: SparkSession, ledger_dir: str,
     return spark.read.parquet(_data_path(ledger_dir, stage))
 
 
+def _ledger_runner(spark: SparkSession, ledger_dir: str,
+                   fingerprint: str | None):
+    """Stage runner writing every stage to ``ledger_dir`` (``run_stage``)."""
+    def run(name: str, build, **hints) -> DataFrame:
+        return run_stage(spark, ledger_dir, name, build,
+                         input_fingerprint=fingerprint, **hints)
+
+    return run
+
+
 def ledger_summary(ledger_dir: str) -> list[dict]:
     out = []
     root = Path(ledger_dir)
@@ -223,15 +244,10 @@ def resolve_entities_resumable(spark: SparkSession, pages: DataFrame,
     skips the O(m²) pair/score ledgers entirely; star_collapse=False ledgers
     the full enumeration (pairs, scores) for audits that need per-pair rows.
     """
-    from .pipeline import ERConfig, resolve_entities
-
-    def ledgered(name: str, build, **hints) -> DataFrame:
-        return run_stage(spark, ledger_dir, name, build,
-                         input_fingerprint=fingerprint, **hints)
-
     return resolve_entities(pages, titles, cfg=cfg or ERConfig(),
                             id_col=id_col, text_col=text_col,
-                            stage_runner=ledgered)
+                            stage_runner=_ledger_runner(spark, ledger_dir,
+                                                        fingerprint))
 
 
 def resolve_entities_incremental(spark: SparkSession, pages_new: DataFrame,
@@ -254,51 +270,24 @@ def resolve_entities_incremental(spark: SparkSession, pages_new: DataFrame,
     ``new_ledger``, which then serves as ``old_ledger`` for the next
     increment.
     """
-    from .operators import blocking as B
-    from .pipeline import ERConfig, _mentions, cluster_from_blocks
-
     cfg = cfg or ERConfig()
-    old_blocks = _read_complete(spark, old_ledger, "20_blocks")
-    old_ids = (_read_complete(spark, old_ledger, "50_clusters")
-               .select(F.col(id_col).alias("id")))
-
-    def run(name: str, build, **hints) -> DataFrame:
-        return run_stage(spark, new_ledger, name, build,
-                         input_fingerprint=fingerprint, **hints)
-
-    keys = B.title_keys(titles)
-    ments_new = run(
-        "10_mentions",
-        lambda: _mentions(pages_new.select(id_col, text_col), keys, cfg,
-                          id_col, text_col),
-    )
     # old members come pre-normalized from the ledger (drop the old salt —
     # sizes change under the union, so salting must recompute)
-    members = (
-        old_blocks.select("id", "block_key", "surface")
-        .unionByName(B.block_members(ments_new, keys))
-    )
-    blocks = run(
-        "20_blocks",
-        lambda: B.salt_blocks(members.localCheckpoint(),
-                              cap=cfg.block_cap, nsalt=cfg.nsalt),
-        bucket_by=["block_key"], sort_by=["block_key", "salt", "surface"],
-    )
-    if cfg.star_collapse:
-        scored = None   # the star path derives edges from blocks directly
-    else:
-        from .operators import pairs as P
-        from .operators import scoring as S
-        pairs = run("30_pairs", lambda: P.candidate_pairs(blocks, salted=True))
-        scored = run("40_scores",
-                     lambda: S.score_pairs(pairs, jw_weight=cfg.jw_weight))
-    all_ids = old_ids.unionByName(
-        pages_new.select(F.col(id_col).alias("id"))).distinct()
+    old_members = (_read_complete(spark, old_ledger, "20_blocks")
+                   .select("id", "block_key", "surface"))
+    old_ids = (_read_complete(spark, old_ledger, "50_clusters")
+               .select(F.col(id_col).alias("id")))
+    run = _ledger_runner(spark, new_ledger, fingerprint)
+    blocks, scored = _er_stage_results(pages_new, titles, cfg, id_col,
+                                       text_col, run,
+                                       prior_members=old_members)
+    all_ids = old_ids.unionByName(pages_new.select(F.col(id_col).alias("id")))
     return cluster_from_blocks(blocks, scored, all_ids, cfg, run, id_col)
 
 
 def resolve_documents_resumable(spark: SparkSession, docs: DataFrame,
-                                ledger_dir: str, threshold: float = 0.80,
+                                ledger_dir: str,
+                                threshold: float = DOC_THRESHOLD,
                                 fingerprint: str | None = None) -> DataFrame:
     """The flagship pipeline split into ledgered stages: buckets → pairs →
     scores → clusters. Kill it between stages and rerun — completed stages
@@ -306,14 +295,9 @@ def resolve_documents_resumable(spark: SparkSession, docs: DataFrame,
     ``pipeline.resolve_documents`` (which defaults to a THROWAWAY ledger);
     this entry point pins the ledger to ``ledger_dir`` so a later process
     can resume it or extend it incrementally."""
-    from .pipeline import resolve_documents
-
-    def ledgered(name: str, build, **hints) -> DataFrame:
-        return run_stage(spark, ledger_dir, name, build,
-                         input_fingerprint=fingerprint, **hints)
-
     return resolve_documents(docs, threshold=threshold,
-                             stage_runner=ledgered)
+                             stage_runner=_ledger_runner(spark, ledger_dir,
+                                                         fingerprint))
 
 
 def ivf_assign_resumable(spark: SparkSession, vecs: DataFrame,
@@ -377,83 +361,26 @@ def ivf_assign_incremental(spark: SparkSession, vecs_new: DataFrame,
 
 def resolve_documents_incremental(spark: SparkSession, docs_new: DataFrame,
                                   docs_old: DataFrame, old_ledger: str,
-                                  new_ledger: str, threshold: float = 0.80,
+                                  new_ledger: str,
+                                  threshold: float = DOC_THRESHOLD,
                                   fingerprint: str | None = None) -> DataFrame:
     """Near-dup clusters over old ∪ new documents where ONLY the new docs
     are shingled/minhashed — the incremental crawl shape at 10^12 docs.
 
-    The old corpus contributes its ledgered buckets and scored pairs;
+    The old corpus contributes its ledgered buckets, scored pairs and ids;
     ``docs_old``'s texts are tokenized only for old partners of NEW pairs
     (an explicit participant semi-join — only the narrow id column of the
-    old corpus is scanned). Exactness: LSH
-    buckets are per-doc (union of bucket tables ≡ buckets of the union),
-    and the deterministic id-cap can only DISPLACE larger ids when new
-    members arrive, so every union-capped old-old pair already has an
-    old-ledger score. Result equals a full re-run (test-pinned); the union
-    stages land in ``new_ledger`` for chaining.
+    old corpus is scanned). Same stage graph as ``resolve_documents`` with
+    the old ledger as its prior (``pipeline._doc_stage_graph`` states the
+    exactness argument). Result equals a full re-run (test-pinned); the
+    union stages land in ``new_ledger`` for chaining.
     """
-    from .operators import blocking as B
-    from .operators import cc as CC
-    from .pipeline import score_doc_pairs
-
-    old_buckets = _read_complete(spark, old_ledger, "10_buckets")
-    old_scores = _read_complete(spark, old_ledger, "30_scores")
-    old_ids = (_read_complete(spark, old_ledger, "40_clusters")
-               .select(F.col("doc_id").alias("id")))
-
-    def run(name: str, build, **hints) -> DataFrame:
-        return run_stage(spark, new_ledger, name, build,
-                         input_fingerprint=fingerprint, **hints)
-
-    def _buckets() -> DataFrame:
-        sh = B.shingle_df(docs_new, "doc_id", "text", k=5)
-        sig = B.minhash_signatures(sh, num_hashes=16)
-        return old_buckets.unionByName(
-            B.lsh_buckets(sig, bands=4, rows_per_band=4))
-
-    buckets = run("10_buckets", _buckets,
-                  bucket_by=["band", "bucket"],
-                  sort_by=["band", "bucket", "id"])
-
-    def _pairs() -> DataFrame:
-        from .pipeline import DOC_BUCKET_CAP
-        # fused cap + pair enumeration — identical rows to the former
-        # cap_blocks + bucket_pair_join (capped_pair_explode docstring),
-        # so incremental == batch holds unchanged
-        return B.capped_pair_explode(buckets, key_col=["band", "bucket"],
-                                     id_col="id", cap=DOC_BUCKET_CAP)
-
-    pairs = run("20_pairs", _pairs)
-
-    def _scores() -> DataFrame:
-        # pairs already scored in the old ledger keep their scores; only
-        # pairs touching a NEW doc are scored. The scoring input is
-        # EXPLICITLY semi-joined to the fresh-pair participants first —
-        # Catalyst does not prune the token/prefix projections through the
-        # join, so without this every old doc would be re-tokenized each
-        # increment (O(corpus) CPU instead of O(new))
-        keep_old = old_scores.join(pairs, ["id_a", "id_b"], "left_semi")
-        fresh = pairs.join(old_scores.select("id_a", "id_b"),
-                           ["id_a", "id_b"], "left_anti").localCheckpoint()
-        participants = (
-            fresh.select(F.col("id_a").alias("doc_id"))
-            .unionByName(fresh.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        docs_union = docs_old.select("doc_id", "text").unionByName(
-            docs_new.select("doc_id", "text"))
-        docs_part = docs_union.join(participants, "doc_id", "left_semi")
-        return keep_old.unionByName(score_doc_pairs(fresh, docs_part))
-
-    scores = run("30_scores", _scores)
-
-    def _clusters() -> DataFrame:
-        edges = scores.where(F.col("score") >= threshold).select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-        ids = old_ids.unionByName(
-            docs_new.select(F.col("doc_id").alias("id"))).distinct()
-        return CC.cluster_assignments(edges, ids).select(
-            F.col("id").alias("doc_id"), "cluster_id")
-
-    return run("40_clusters", _clusters)
+    prior = _DocPrior(
+        buckets=_read_complete(spark, old_ledger, "10_buckets"),
+        scores=_read_complete(spark, old_ledger, "30_scores"),
+        ids=(_read_complete(spark, old_ledger, "40_clusters")
+             .select(F.col("doc_id").alias("id"))),
+        docs=docs_old)
+    return _doc_stage_graph(docs_new,
+                            _ledger_runner(spark, new_ledger, fingerprint),
+                            threshold=threshold, prior=prior)

@@ -78,67 +78,12 @@ def _small_star(e: DataFrame) -> DataFrame:
 SMALL_GRAPH_EDGES = 8_000_000
 
 
-def _driver_union_find(rows: list) -> list[tuple]:
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in rows:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by min so the representative IS the component min
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    return [(n, find(n)) for n in parent]
-
-
-def _numpy_components(pdf) -> "tuple":
-    """(ids, component_ids) for the small-graph driver path — vectorized
-    min-label propagation with pointer jumping over numpy arrays.
-
-    The dict/loop union-find (kept above as the semantics reference and
-    property-test twin) spends ~10s of pure-Python time at 2M edges — a
-    SERIAL fraction that caps strong-scaling of the whole pipeline.
-
-    Ids are mapped to dense ints with ``pd.factorize`` (hash-based, O(n) —
-    ``np.unique`` lexicographically SORTS, which costs 10× on millions of
-    URL strings). Propagation then runs in code space; the propagated label
-    is a consistent per-component representative but NOT the min id, so a
-    final groupby maps each component to its true min original id.
-    """
-    import numpy as np
-    import pandas as pd
-
-    a = pdf["a"].to_numpy()
-    b = pdf["b"].to_numpy()
-    codes, ids = pd.factorize(np.concatenate([a, b]))
-    ids = np.asarray(ids)
-    ia, ib = codes[: len(a)], codes[len(a):]
-    lab = _propagate_labels(ia, ib, len(ids))
-    # code-space roots -> true component min id, via ONE argsort of the ids
-    # and integer rank minima (pandas groupby('root').transform('min') on
-    # string ids measured 17s at 2.4M nodes; this path ~2s)
-    perm = np.argsort(ids, kind="stable")
-    rank = np.empty(len(ids), dtype=np.int64)
-    rank[perm] = np.arange(len(ids))
-    min_rank = np.full(len(ids), len(ids), dtype=np.int64)
-    np.minimum.at(min_rank, lab, rank)
-    return ids, ids[perm[min_rank[lab]]]
-
-
 def _propagate_labels(ia, ib, n_nodes):
     """Min-label propagation with pointer jumping over edge code arrays —
-    the numpy core shared by the pandas and Arrow driver paths. Returns the
-    converged label array (a consistent per-component representative in code
-    space, NOT yet the min original id)."""
+    the numpy core of the Arrow driver path (and of the pandas oracle in
+    ``tests/test_cc.py``). Returns the converged label array (a consistent
+    per-component representative in code space, NOT yet the min original
+    id)."""
     import numpy as np
 
     lab = np.arange(n_nodes)
@@ -161,14 +106,17 @@ def _propagate_labels(ia, ib, n_nodes):
 def _arrow_components(tbl) -> "tuple":
     """(ids, components) as pyarrow Arrays for the small-graph driver path.
 
-    Same propagation as ``_numpy_components`` (kept as the semantics twin
-    for property tests), but the string-heavy steps stay in Arrow C++:
-    ``dictionary_encode`` replaces ``pd.factorize`` (no object-dtype
+    Vectorized min-label propagation (``_propagate_labels``) over
+    dictionary-encoded ids; a dict/loop union-find spends ~10s of pure-Python
+    time at 2M edges — a SERIAL fraction that caps strong-scaling of the
+    whole pipeline. The string-heavy steps stay in Arrow C++:
+    ``dictionary_encode`` instead of ``pd.factorize`` (no object-dtype
     conversion of millions of URLs) and ``sort_indices`` over the unique
-    dictionary replaces the row-space argsort. Measured at 1.1M url-string
-    edges: 4.0s -> 1.6s, ALL of it serial driver time the rest of the
-    cluster spends idle on — the single largest Amdahl term in the
-    strong-scaling profile at bench scale.
+    dictionary instead of a row-space argsort. Measured at 1.1M url-string
+    edges: 4.0s (pandas) -> 1.6s, ALL of it serial driver time the rest of
+    the cluster spends idle on — the single largest Amdahl term in the
+    strong-scaling profile at bench scale. ``tests/test_cc.py`` checks it
+    against a pandas twin and a dict union-find oracle.
     """
     import numpy as np
     import pyarrow as pa

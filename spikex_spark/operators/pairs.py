@@ -43,19 +43,3 @@ def candidate_pairs(blocks: DataFrame, key_col: str = "block_key",
     if salted:
         pairs = pairs.drop("salt")
     return pairs.dropDuplicates(["id_a", "id_b", key_col])
-
-
-def dedup_pairs(pairs: DataFrame) -> DataFrame:
-    """One row per (id_a, id_b) across all blocking channels — keeps the
-    lexicographically smallest key for lineage/debugging."""
-    return (
-        pairs.groupBy("id_a", "id_b")
-        .agg(
-            F.min("block_key").alias("block_key"),
-            *[
-                F.first(c).alias(c)
-                for c in pairs.columns
-                if c not in ("id_a", "id_b", "block_key")
-            ],
-        )
-    )

@@ -90,15 +90,6 @@ def allowed_category_links(links: DataFrame, titles: DataFrame) -> DataFrame:
     )
 
 
-def id_title_lookup(titles: DataFrame, ids: DataFrame,
-                    id_col: str = "pageid") -> DataFrame:
-    """J4: enrich arbitrary pageid rows with titles (broadcast dim join)."""
-    dim = titles.select("pageid", "title", "kind")
-    return ids.join(F.broadcast(dim), ids[id_col] == dim.pageid, "left").drop(
-        dim.pageid
-    )
-
-
 def json_field_stats(df: DataFrame, group_col: str, json_col: str,
                      path: str, value_col: str) -> DataFrame:
     """Semi-structured column analytics: extract an integer field from a

@@ -18,6 +18,7 @@ Two entry points:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,7 +43,7 @@ CURATION_BLOCK = 256
 _EPHEMERAL_LEDGERS: list[str] = []
 
 
-def _ephemeral_ledger_runner(spark, bucketed_only: bool = True):
+def _ephemeral_ledger_runner(spark):
     """Stage runner: ledgered/bucketed execution in a throwaway dir.
 
     The one-shot in-plan mode (all stages fused into one Catalyst plan with
@@ -54,11 +55,11 @@ def _ephemeral_ledger_runner(spark, bucketed_only: bool = True):
     and the scale-safe shape on a real cluster (each stage write is the
     Iceberg stage snapshot).
 
-    ``bucketed_only``: materialize just the stages carrying a ``bucket_by``
-    hint (the multi-consumer ones, where the write buys exchange-free
-    reads) and leave single-consumer stages fused — that's the performance
-    sweet spot; a FULL per-stage ledger (resume after a mid-pipeline kill)
-    is ``lineage.resolve_*_resumable``'s job over a persistent dir.
+    Only the stages carrying a ``bucket_by`` hint (the multi-consumer ones,
+    where the write buys exchange-free reads) are materialized; single-
+    consumer stages stay fused — that's the performance sweet spot; a FULL
+    per-stage ledger (resume after a mid-pipeline kill) is
+    ``lineage.resolve_*_resumable``'s job over a persistent dir.
     """
     import atexit
     import os
@@ -96,7 +97,7 @@ def _ephemeral_ledger_runner(spark, bucketed_only: bool = True):
     _EPHEMERAL_LEDGERS.append(led)
 
     def run(name: str, build, **hints) -> DataFrame:
-        if bucketed_only and not hints.get("bucket_by"):
+        if not hints.get("bucket_by"):
             return build()
         # no lineage-counter job: this ledger is never resumed or audited
         return run_stage(spark, led, name, build,
@@ -146,7 +147,6 @@ class ERConfig:
     max_ngram: int = 4
     block_cap: int = 10_000
     nsalt: int = 16
-    use_arrow_extract: bool = True
     # dictionaries up to this many keys ship into the Arrow scan stage
     # (reference broadcast-trie strategy); larger ones use the n-gram join
     broadcast_keys_max: int = 2_000_000
@@ -185,27 +185,41 @@ def _mentions(pages: DataFrame, keys: DataFrame, cfg: ERConfig,
 
 
 def _er_stage_results(pages: DataFrame, titles: DataFrame, cfg: ERConfig,
-                      id_col: str, text_col: str, run) -> tuple[DataFrame, DataFrame]:
+                      id_col: str, text_col: str, run,
+                      prior_members: DataFrame | None = None
+                      ) -> tuple[DataFrame, DataFrame]:
     """Shared stage graph (mentions → blocks → pairs → scores) behind a
     ``run(name, build)`` hook: identity for the one-shot path,
     ``lineage.run_stage`` for the ledgered/resumable path — ONE definition
-    of the flagship pipeline, two physical execution modes."""
+    of the flagship pipeline, two physical execution modes.
+
+    ``prior_members``: (id, block_key, surface) block members of an already
+    resolved corpus (``lineage.resolve_entities_incremental``). Only
+    ``pages`` are scanned; the prior members join the union BEFORE salting,
+    because block sizes — hence salts and caps — change under the union."""
     keys = B.title_keys(titles)
     ments = run(
         "10_mentions",
         lambda: _mentions(pages.select(id_col, text_col), keys, cfg,
                           id_col, text_col),
     )
-    # blocks feed block_sizes, both sides of the pair self-join, and the
-    # surface lookup — checkpoint the members once instead of recomputing
-    # the whole extract→mention chain per consumer (the ledgered runner
-    # additionally persists the salted result)
+
+    def _blocks() -> DataFrame:
+        members = B.block_members(ments, keys)
+        if prior_members is not None:
+            members = prior_members.unionByName(members)
+        # blocks feed block_sizes, both sides of the pair self-join, and the
+        # surface lookup — checkpoint the members once instead of
+        # recomputing the whole extract→mention chain per consumer (the
+        # ledgered runner additionally persists the salted result)
+        return B.salt_blocks(
+            members.localCheckpoint(),  # eager: lazy+AQE showed unstable re-plans
+            cap=cfg.block_cap, nsalt=cfg.nsalt,
+        )
+
     blocks = run(
         "20_blocks",
-        lambda: B.salt_blocks(
-            B.block_members(ments, keys).localCheckpoint(),  # eager: lazy+AQE showed unstable re-plans
-            cap=cfg.block_cap, nsalt=cfg.nsalt,
-        ),
+        _blocks,
         # ledgered runs write this stage hash-bucketed + sorted so the
         # downstream window / pair self-join / size agg all read
         # pre-partitioned, pre-sorted data — no exchange per consumer
@@ -325,72 +339,142 @@ def cluster_from_blocks(blocks: DataFrame, scored: DataFrame | None,
     return run("50_clusters", _clusters)
 
 
-# the ONE deterministic LSH bucket cap shared by the one-shot, ledgered,
-# and incremental document pipelines — their equivalence proofs assume it
+# The document pipelines' LSH shape and match threshold — ONE definition
+# shared by the one-shot, ledgered and incremental runs (their equivalence
+# proofs assume identical shingles, signatures, bands and cap); the DuckDB
+# oracles in __spark_entry__.py mirror these values.
+DOC_SHINGLE_K = 5
+DOC_NUM_HASHES = 16
+DOC_BANDS = 4
 DOC_BUCKET_CAP = 1000
+# JW sees the first DOC_NORM_PREFIX chars of the normalized text (JW is
+# quadratic per pair — bounding the operand keeps the scorer O(1) per pair
+# at 100 TB); token-Jaccard sees the full text
+DOC_NORM_PREFIX = 64
+DOC_THRESHOLD = 0.80
 
 
-def bucket_pair_join(capped_buckets: DataFrame) -> DataFrame:
-    """(id_a, id_b) distinct pairs sharing ≥1 (band, bucket) — the self-join
-    tail shared by every document-pipeline variant (pass ALREADY-capped
-    buckets; see ``blocking.cap_blocks`` + ``DOC_BUCKET_CAP``)."""
-    left = capped_buckets.select("band", "bucket", F.col("id").alias("id_a"))
-    right = capped_buckets.select("band", "bucket", F.col("id").alias("id_b"))
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+class _DocPrior(NamedTuple):
+    """An already resolved corpus, as the incremental document run reads it
+    from a COMPLETE ledger: its LSH buckets (10_buckets), its scored pairs
+    (30_scores), its id set (40_clusters) and its documents' texts."""
+    buckets: DataFrame
+    scores: DataFrame
+    ids: DataFrame
+    docs: DataFrame
 
 
-def doc_candidate_pairs(docs: DataFrame, cfg: ERConfig = ERConfig(),
-                        id_col: str = "doc_id", text_col: str = "text",
-                        shingle_k: int = 5, num_hashes: int = 16,
-                        bands: int = 4,
-                        bucket_cap: int = DOC_BUCKET_CAP) -> DataFrame:
+def _doc_stage_graph(docs: DataFrame, run, cfg: ERConfig = ERConfig(),
+                     id_col: str = "doc_id", text_col: str = "text",
+                     threshold: float = DOC_THRESHOLD,
+                     shingle_k: int = DOC_SHINGLE_K,
+                     prior: _DocPrior | None = None,
+                     pairs_only: bool = False) -> DataFrame:
+    """The document pipeline's ONE stage graph: buckets → pairs → scores →
+    clusters behind a ``run(name, build, **hints)`` hook. Batch, resumable
+    and incremental runs differ only by ``run`` and ``prior``;
+    ``pairs_only`` stops after the pair stage (``doc_candidate_pairs``).
+
+    ``prior`` extends an already resolved corpus: only ``docs`` are
+    shingled/minhashed, and the prior enters at exactly three points — its
+    buckets join 10_buckets, its scores are kept in 30_scores (only pairs
+    touching a new doc are scored), and its ids join the CC id set.
+    Exactness: LSH buckets are per-doc (union of bucket tables ≡ buckets of
+    the union), and the deterministic id-cap can only DISPLACE larger ids
+    when new members arrive, so every union-capped old-old pair already has
+    a prior score. The result equals a run over old ∪ new (test-pinned).
+    """
+    def _buckets() -> DataFrame:
+        sh = B.shingle_df(docs, id_col, text_col, k=shingle_k)
+        sig = B.minhash_signatures(sh, num_hashes=DOC_NUM_HASHES)
+        fresh = B.lsh_buckets(sig, bands=DOC_BANDS,
+                              rows_per_band=DOC_NUM_HASHES // DOC_BANDS)
+        return fresh if prior is None else prior.buckets.unionByName(fresh)
+
+    buckets = run("10_buckets", _buckets,
+                  bucket_by=["band", "bucket"],
+                  sort_by=["band", "bucket", "id"])
+
+    # FUSED cap + pair enumeration: one exchange on (band, bucket) shared by
+    # the cap window and the member aggregation, pairs generated map-side.
+    # It reads buckets ONCE, so the in-plan runner needs no checkpoint
+    # barrier against double recompute, and under a ledgered runner the
+    # bucketed (band, bucket) table read feeds the cap window + member agg
+    # with no exchange at all. The cap is the LSH skew guard: buckets are
+    # content-keyed, so a boilerplate page duplicated millions of times
+    # lands its whole clone set in ONE bucket; each bucket keeps its first
+    # DOC_BUCKET_CAP members by id (mirrored in the oracle's QUALIFY).
+    pairs = run("20_pairs", lambda: B.capped_pair_explode(
+        buckets, key_col=["band", "bucket"], id_col="id", cap=DOC_BUCKET_CAP))
+    if pairs_only:
+        return pairs
+
+    def _scores() -> DataFrame:
+        if prior is None:
+            return score_doc_pairs(pairs, docs, cfg, id_col, text_col)
+        # pairs already scored in the prior keep their scores; only pairs
+        # touching a NEW doc are scored. The scoring input is EXPLICITLY
+        # semi-joined to the fresh-pair participants first — Catalyst does
+        # not prune the token/prefix projections through the join, so
+        # without this every old doc would be re-tokenized each increment
+        # (O(corpus) CPU instead of O(new))
+        keep_old = prior.scores.join(pairs, ["id_a", "id_b"], "left_semi")
+        fresh = pairs.join(prior.scores.select("id_a", "id_b"),
+                           ["id_a", "id_b"], "left_anti").localCheckpoint()
+        participants = (
+            fresh.select(F.col("id_a").alias(id_col))
+            .unionByName(fresh.select(F.col("id_b").alias(id_col)))
+            .distinct()
+        )
+        texts = prior.docs.select(id_col, text_col).unionByName(
+            docs.select(id_col, text_col))
+        return keep_old.unionByName(score_doc_pairs(
+            fresh, texts.join(participants, id_col, "left_semi"), cfg,
+            id_col, text_col))
+
+    scores = run("30_scores", _scores)
+
+    def _clusters() -> DataFrame:
+        edges = scores.where(F.col("score") >= threshold).select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        )
+        ids = docs.select(F.col(id_col).alias("id"))
+        if prior is not None:
+            ids = prior.ids.unionByName(ids)
+        # ids_unique: doc_id is this operator's identity contract — skip
+        # the defensive distinct's exchange over the whole corpus. A union
+        # with a prior keeps it: a re-crawled doc can be in both.
+        assign = CC.cluster_assignments(edges, ids,
+                                        ids_unique=prior is None)
+        return assign.select(F.col("id").alias(id_col), "cluster_id")
+
+    return run("40_clusters", _clusters)
+
+
+def doc_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
+                        text_col: str = "text") -> DataFrame:
     """MinHash/LSH near-dup candidate pairs over a generic documents table.
 
-    (id_a, id_b) distinct pairs sharing ≥1 LSH bucket. Every step is
+    (id_a, id_b) distinct pairs sharing ≥1 capped LSH bucket — the pair
+    stage of ``resolve_documents``, built as one plan. Every step is
     reproducible in ANSI SQL (md5-based minhash) for the DuckDB oracle.
-
-    ``bucket_cap``: LSH buckets are content-keyed, so a boilerplate page
-    duplicated millions of times lands its whole clone set in ONE bucket —
-    a quadratic pair bomb exactly like a hub blocking key. Buckets keep the
-    first ``bucket_cap`` members by id (deterministic, mirrored in the
-    oracle's QUALIFY) before the self-join.
     """
-    sh = B.shingle_df(docs, id_col, text_col, k=shingle_k)
-    sig = B.minhash_signatures(sh, num_hashes=num_hashes)
-    buckets = B.lsh_buckets(sig, bands=bands, rows_per_band=num_hashes // bands)
-    # FUSED cap + pair enumeration (capped_pair_explode): one exchange on
-    # (band, bucket) shared by the cap window and the member aggregation,
-    # pairs generated map-side — row-identical to cap_blocks + the
-    # bucket_pair_join self-join, which needed a checkpoint barrier just to
-    # stop the chain recomputing for both join sides (and still paid two
-    # join-side sorts).
-    return B.capped_pair_explode(buckets, key_col=["band", "bucket"],
-                                 id_col="id", cap=bucket_cap)
+    return _doc_stage_graph(docs, run_inplan, id_col=id_col,
+                            text_col=text_col, pairs_only=True)
 
 
 def doc_scored_pairs(docs: DataFrame, cfg: ERConfig = ERConfig(),
                      id_col: str = "doc_id", text_col: str = "text",
-                     norm_prefix: int = 64, score_digits: int = 6) -> DataFrame:
-    """Candidate pairs + combined similarity score.
-
-    JW runs on the first ``norm_prefix`` chars of the normalized text (JW is
-    quadratic per pair — bounding the operand keeps the scorer O(1) per pair
-    at 100 TB); token-Jaccard sees the full text.
-    """
-    pairs = doc_candidate_pairs(docs, cfg, id_col, text_col)
-    return score_doc_pairs(pairs, docs, cfg, id_col, text_col,
-                           norm_prefix, score_digits)
+                     score_digits: int = 6) -> DataFrame:
+    """Candidate pairs + combined similarity score."""
+    pairs = doc_candidate_pairs(docs, id_col, text_col)
+    return score_doc_pairs(pairs, docs, cfg, id_col, text_col, score_digits)
 
 
 def score_doc_pairs(pairs: DataFrame, docs: DataFrame,
                     cfg: ERConfig = ERConfig(),
                     id_col: str = "doc_id", text_col: str = "text",
-                    norm_prefix: int = 64, score_digits: int = 6) -> DataFrame:
+                    score_digits: int = 6) -> DataFrame:
     """Score an EXPLICIT (id_a, id_b) pair table against the docs' texts —
     the scoring half of ``doc_scored_pairs``, reusable by the incremental
     path (which scores only pairs touching new docs). ``docs`` is read only
@@ -401,7 +485,7 @@ def score_doc_pairs(pairs: DataFrame, docs: DataFrame,
     texts = docs.select(
         F.col(id_col).alias("id"),
         F.array_distinct(S._tokens(F.col(text_col))).alias("toks"),
-        F.substring(S._norm(F.col(text_col)), 1, norm_prefix).alias("n64"),
+        F.substring(S._norm(F.col(text_col)), 1, DOC_NORM_PREFIX).alias("n64"),
     )
     p = (
         pairs.join(
@@ -434,16 +518,15 @@ def score_doc_pairs(pairs: DataFrame, docs: DataFrame,
 
 def resolve_documents(docs: DataFrame, cfg: ERConfig = ERConfig(),
                       id_col: str = "doc_id", text_col: str = "text",
-                      threshold: float = 0.80, stage_runner=None,
-                      shingle_k: int = 5, num_hashes: int = 16,
-                      bands: int = 4) -> DataFrame:
+                      threshold: float = DOC_THRESHOLD, stage_runner=None,
+                      shingle_k: int = DOC_SHINGLE_K) -> DataFrame:
     """Flagship: (doc_id, cluster_id) near-dup clusters over documents.
 
-    Staged (buckets → pairs → scores → clusters) behind the same
-    ``stage_runner`` hook as ``resolve_entities``; default = size-adaptive
-    (``_auto_runner``): above ``cfg.ledger_min_bytes`` the LSH bucket stage
-    is written hash-bucketed on (band, bucket) so the pair self-join reads
-    both sides co-partitioned with no exchange.
+    Staged (``_doc_stage_graph``: buckets → pairs → scores → clusters)
+    behind the same ``stage_runner`` hook as ``resolve_entities``; default
+    = size-adaptive (``_auto_runner``): above ``cfg.ledger_min_bytes`` the
+    LSH bucket stage is written hash-bucketed on (band, bucket) so the pair
+    stage reads it co-partitioned with no exchange.
     ``lineage.resolve_documents_resumable`` is this function over a
     persistent ledger dir.
 
@@ -453,49 +536,15 @@ def resolve_documents(docs: DataFrame, cfg: ERConfig = ERConfig(),
     boilerplate scaffolds), so signature collisions between UNRELATED
     pages stop being rare: the per-bucket cap still bounds each block,
     but the number of ~cap-sized blocks grows with corpus size (measured
-    at 10M pages: k=5 → thousands of capped mega-buckets, ~90 GB of pair
-    shuffle; k=13 → linear pair volume). Production crawl-scale runs
-    should use ``shingle_k≈13`` (the Lee et al. exact-substring /
-    RefinedWeb-class granularity) — see ``tools/bench_scale_abs.py``.
+    at 10M pages: 5-char shingles → thousands of capped mega-buckets,
+    ~90 GB of pair shuffle; 13-char → linear pair volume). Production
+    crawl-scale runs should use ``shingle_k≈13`` (the Lee et al.
+    exact-substring / RefinedWeb-class granularity) — see
+    ``tools/bench_scale_abs.py``.
     """
     run = stage_runner or _auto_runner(docs, cfg.ledger_min_bytes)
-
-    def _buckets() -> DataFrame:
-        sh = B.shingle_df(docs, id_col, text_col, k=shingle_k)
-        sig = B.minhash_signatures(sh, num_hashes=num_hashes)
-        return B.lsh_buckets(sig, bands=bands,
-                             rows_per_band=num_hashes // bands)
-
-    buckets = run("10_buckets", _buckets,
-                  bucket_by=["band", "bucket"],
-                  sort_by=["band", "bucket", "id"])
-
-    def _pairs() -> DataFrame:
-        # SAME skew guard + pair semantics as doc_candidate_pairs (one
-        # shared cap — the ledgered/incremental equivalence proofs assume
-        # identical cap semantics). capped_pair_explode reads buckets
-        # ONCE, so the in-plan runner needs no checkpoint barrier against
-        # double recompute, and under a ledgered runner the bucketed
-        # (band, bucket) table read feeds the cap window + member agg with
-        # no exchange at all.
-        return B.capped_pair_explode(buckets, key_col=["band", "bucket"],
-                                     id_col="id", cap=DOC_BUCKET_CAP)
-
-    pairs = run("20_pairs", _pairs)
-    scores = run("30_scores",
-                 lambda: score_doc_pairs(pairs, docs, cfg, id_col, text_col))
-
-    def _clusters() -> DataFrame:
-        edges = scores.where(F.col("score") >= threshold).select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-        # ids_unique: doc_id is this operator's identity contract — skip
-        # the defensive distinct's exchange over the whole corpus
-        assign = CC.cluster_assignments(
-            edges, docs.select(F.col(id_col).alias("id")), ids_unique=True)
-        return assign.select(F.col("id").alias(id_col), "cluster_id")
-
-    return run("40_clusters", _clusters)
+    return _doc_stage_graph(docs, run, cfg, id_col, text_col, threshold,
+                            shingle_k)
 
 
 def scored_pairs(pages: DataFrame, titles: DataFrame,

@@ -268,13 +268,3 @@ def fetch_dump(url: str, cache_dir: str, chunk_size: int = 1 << 20,
         # the file's own size, so writing it here would always "verify".)
         meta.unlink(missing_ok=True)
     return str(dest)
-
-
-def read_wiki_dump_url(spark: SparkSession, url: str, kind: str,
-                       cache_dir: str) -> DataFrame:
-    """S3+S1 composed: download-with-cache, then the distributed dump scan.
-
-    The download runs on the driver (dumps are fetched once, scanned many
-    times); at cluster scale point this at shared storage so every executor
-    reads the cached copy."""
-    return read_wiki_dump(spark, fetch_dump(url, cache_dir), kind)

@@ -269,6 +269,7 @@ def streaming_signature_dedup(stream: DataFrame, ts_col: str = "warc_ts",
         char_shingles_expr,
         minhash_sig_expr,
     )
+    from ..pipeline import DOC_SHINGLE_K
 
     # each expensive expression in its OWN projection (see shingle_df /
     # SPARK-36718 notes: inlining re-evaluates the chain per element)
@@ -278,7 +279,7 @@ def streaming_signature_dedup(stream: DataFrame, ts_col: str = "warc_ts",
     )
     shingled = normed.select(
         id_col, ts_col, text_col,
-        char_shingles_expr("_norm", k=5).alias("_sh"),
+        char_shingles_expr("_norm", k=DOC_SHINGLE_K).alias("_sh"),
     )
     sigged = shingled.select(
         id_col, ts_col, text_col,

@@ -34,7 +34,6 @@ import re
 WS_CLASS = r"[ \t\n\x0b\f\r]"
 _RE_WS = re.compile(WS_CLASS)
 _RE_TOKEN = re.compile(r"[a-z0-9]+")
-_RE_TAG = re.compile(rb"<[^>]*>")
 
 
 def extract_text(text: str) -> str:
@@ -44,17 +43,6 @@ def extract_text(text: str) -> str:
     matches spikex ``_preprocess_doc`` (``pipes/wikipages.py:62``).
     """
     return _RE_WS.sub("_", text)
-
-
-def extract_text_from_html(html: bytes) -> str:
-    """Strip tags from raw page bytes, then apply ``extract_text``.
-
-    The synthetic ``html`` column wraps ``text`` in simple tags; real-world
-    HTML boilerplate removal is out of scope for byte-parity (the reference
-    consumes pre-extracted text).
-    """
-    stripped = _RE_TAG.sub(b" ", html).decode("utf-8", errors="replace")
-    return extract_text(stripped.strip())
 
 
 def clean_title(title: str) -> str:

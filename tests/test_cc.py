@@ -4,7 +4,14 @@ from __future__ import annotations
 
 import random
 
-from spikex_spark.operators.cc import cluster_assignments, connected_components
+import numpy as np
+import pandas as pd
+
+from spikex_spark.operators.cc import (
+    _propagate_labels,
+    cluster_assignments,
+    connected_components,
+)
 
 
 def _union_find_oracle(edges, nodes):
@@ -27,6 +34,27 @@ def _union_find_oracle(edges, nodes):
         for n in members:
             out[n] = mn
     return out
+
+
+def _numpy_components(pdf) -> tuple:
+    """(ids, component_ids) — the pandas twin of the engine's Arrow
+    small-graph path (``cc._arrow_components``): the same label propagation,
+    with ids mapped to dense ints by ``pd.factorize`` and the component min
+    found by a numpy argsort instead of Arrow's dictionary sort."""
+    a = pdf["a"].to_numpy()
+    b = pdf["b"].to_numpy()
+    codes, ids = pd.factorize(np.concatenate([a, b]))
+    ids = np.asarray(ids)
+    ia, ib = codes[: len(a)], codes[len(a):]
+    lab = _propagate_labels(ia, ib, len(ids))
+    # code-space roots -> true component min id, via ONE argsort of the ids
+    # and integer rank minima
+    perm = np.argsort(ids, kind="stable")
+    rank = np.empty(len(ids), dtype=np.int64)
+    rank[perm] = np.arange(len(ids))
+    min_rank = np.full(len(ids), len(ids), dtype=np.int64)
+    np.minimum.at(min_rank, lab, rank)
+    return ids, ids[perm[min_rank[lab]]]
 
 
 def test_small_graphs(spark):
@@ -81,12 +109,6 @@ def test_cluster_assignments_includes_singletons(spark):
 
 
 def test_numpy_components_matches_dict_union_find():
-    import random
-
-    import pandas as pd
-
-    from spikex_spark.operators.cc import _driver_union_find, _numpy_components
-
     rng = random.Random(7)
     for trial in range(20):
         n = rng.randint(2, 120)
@@ -95,7 +117,7 @@ def test_numpy_components_matches_dict_union_find():
         edges = [(min(u, v), max(u, v)) for u, v in edges if u != v]
         if not edges:
             continue
-        gold = dict(_driver_union_find(list(edges)))
+        gold = _union_find_oracle(edges, sorted({u for e in edges for u in e}))
         pdf = pd.DataFrame(edges, columns=["a", "b"])
         ids, comps = _numpy_components(pdf)
         got = dict(zip(ids.tolist(), comps.tolist()))
@@ -103,10 +125,6 @@ def test_numpy_components_matches_dict_union_find():
 
 
 def test_numpy_components_string_ids():
-    import pandas as pd
-
-    from spikex_spark.operators.cc import _numpy_components
-
     pdf = pd.DataFrame(
         [("b", "a"), ("c", "b"), ("x", "y")], columns=["a", "b"])
     ids, comps = _numpy_components(pdf)
@@ -120,12 +138,9 @@ def test_arrow_components_matches_numpy_twin():
     string AND int node ids — including the min-original-id component
     representative, where the two paths rank via different sorts (Arrow
     sort_indices on the dictionary vs numpy argsort on factorize order)."""
-    import random
-
-    import pandas as pd
     import pyarrow as pa
 
-    from spikex_spark.operators.cc import _arrow_components, _numpy_components
+    from spikex_spark.operators.cc import _arrow_components
 
     rng = random.Random(11)
     for trial in range(20):

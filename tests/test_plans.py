@@ -188,28 +188,27 @@ def test_bucketed_blocks_stage_consumers_are_exchange_free(spark, tmp_path):
 
 def test_ledgered_doc_pair_join_reuses_bucketing(spark, tmp_path):
     """The documents pipeline's pair stage under a LEDGERED runner: the
-    capped self-join must reuse the 10_buckets (band, bucket) bucketing —
-    the only exchange left is bucket_pair_join's own distinct(). A
-    localCheckpoint slipped between the bucketed read and the join would
-    drop outputPartitioning and re-shuffle BOTH join sides (3 exchanges)."""
+    fused cap + pair explode must reuse the 10_buckets (band, bucket)
+    bucketing — the only exchange left is its own final distinct(). A
+    localCheckpoint slipped between the bucketed read and the pair stage
+    would drop outputPartitioning and re-shuffle the buckets."""
     from spikex_spark.lineage import run_stage
     from spikex_spark.operators import blocking as B
-    from spikex_spark.pipeline import DOC_BUCKET_CAP, bucket_pair_join
+    from spikex_spark.pipeline import DOC_BUCKET_CAP, _doc_stage_graph
 
     docs = spark.range(300).select(
         F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
         F.concat(F.lit("shared sample text number "),
                  (F.col("id") % 40).cast("string")).alias("text"))
 
-    def _buckets():
-        sh = B.shingle_df(docs, "doc_id", "text", k=5)
-        sig = B.minhash_signatures(sh, num_hashes=16)
-        return B.lsh_buckets(sig, bands=4, rows_per_band=4)
+    stages = {}
 
-    buckets = run_stage(spark, str(tmp_path / "led"), "10_buckets", _buckets,
-                        input_fingerprint="t",
-                        bucket_by=["band", "bucket"],
-                        sort_by=["band", "bucket", "id"])
+    def run(name, build, **hints):
+        # ledger the bucketed stage, keep the pair stage as a plan
+        stages[name] = (run_stage(spark, str(tmp_path / "led"), name, build,
+                                  input_fingerprint="t", **hints)
+                        if hints.get("bucket_by") else build())
+        return stages[name]
 
     def shuffles(df) -> int:
         p = _plan(df)
@@ -218,13 +217,13 @@ def test_ledgered_doc_pair_join_reuses_bucketing(spark, tmp_path):
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        capped = B.cap_blocks(buckets, key_col=["band", "bucket"],
-                              id_col="id", cap=DOC_BUCKET_CAP)
-        pairs = bucket_pair_join(capped)
+        pairs = _doc_stage_graph(docs, run, pairs_only=True)
         assert shuffles(pairs) == 1, _plan(pairs)   # distinct() only
         # the anti-pattern this test pins against:
-        chk = bucket_pair_join(capped.localCheckpoint())
-        assert shuffles(chk) >= 3, _plan(chk)
+        chk = B.capped_pair_explode(stages["10_buckets"].localCheckpoint(),
+                                    key_col=["band", "bucket"], id_col="id",
+                                    cap=DOC_BUCKET_CAP)
+        assert shuffles(chk) >= 2, _plan(chk)
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 

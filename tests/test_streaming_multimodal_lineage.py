@@ -865,6 +865,29 @@ def test_documents_incremental_matches_full_rerun(spark, tmp_path):
     assert key(inc) == key(fullrun)
 
 
+def test_documents_incremental_chains_across_two_batches(spark, tmp_path):
+    """The second document increment extends the ledger the first one
+    wrote; the result must equal one full run over all three batches."""
+    from spikex_spark.lineage import (
+        resolve_documents_incremental,
+        resolve_documents_resumable,
+    )
+    from spikex_spark.pipeline import resolve_documents
+
+    full_docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    b0 = full_docs.where("doc_id % 5 >= 2")
+    b1 = full_docs.where("doc_id % 5 = 1")
+    b2 = full_docs.where("doc_id % 5 = 0")
+    led0, led1, led2 = (str(tmp_path / f"docs{i}") for i in range(3))
+    resolve_documents_resumable(spark, b0, led0, fingerprint="v0")
+    resolve_documents_incremental(spark, b1, b0, led0, led1,
+                                  fingerprint="v1").count()
+    inc2 = resolve_documents_incremental(spark, b2, b0.unionByName(b1),
+                                         led1, led2, fingerprint="v2")
+    key = lambda df: {(r["doc_id"], r["cluster_id"]) for r in df.collect()}
+    assert key(inc2) == key(resolve_documents(full_docs))
+
+
 def test_streaming_signature_dedup(spark, pages_dir):
     """Map-side MinHash signature dedup at ingest: survivors = one doc per
     distinct signature, matching the batch signature computation."""
