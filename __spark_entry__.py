@@ -7827,10 +7827,10 @@ def _er_pages_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ER_BLOCKS_LEDGER[sf_dir] = tempfile.mkdtemp(prefix="er_pages_ledger_", **_ledger_scratch())
     ledger = _ER_BLOCKS_LEDGER[sf_dir]
     # lineage_counters=False: this ledger is per-process EPHEMERAL (mkdtemp,
-    # never resumed or audited), so the per-partition counter job — a full
-    # re-read + groupBy of the stage right after writing it — is pure serial
-    # overhead on the timed path; durable resumable ledgers
-    # (lineage.resolve_*_resumable) keep their counters on.
+    # never resumed or audited), so it skips even the listener-bus drain the
+    # per-partition counters need (they are read from the write's own task
+    # metrics); durable resumable ledgers (lineage.resolve_*_resumable)
+    # keep their counters on.
     return run_stage(spark, ledger, "20_blocks", build,
                      input_fingerprint=sf_dir, bucket_by=["block_key"],
                      num_buckets=32, sort_by=["block_key", "surface", "id"],

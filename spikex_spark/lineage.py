@@ -12,21 +12,32 @@ Layout under ``ledger_dir``::
 
     <stage>/data/            stage output (parquet)
     <stage>/_lineage.json    stage name, row count, per-partition counters,
-                             input fingerprints, wall seconds, status
+                             input fingerprints, wall seconds, status,
+                             schema (``schema_ddl``)
 
 ``run_stage`` is idempotent: a COMPLETE marker with matching input
 fingerprints short-circuits to a read of the stored output — restarting a
 killed pipeline skips every finished stage (SURVEY.md §4 custom work #3).
+
+The lineage evidence costs no Spark job of its own. ``rows`` and the
+``partitions`` counters are the write's own task metrics
+(``outputMetrics.recordsWritten``): one ``partitions`` entry per write task,
+keyed by that task's index, which is the index of the output file set it
+wrote. Stages are read back with the stored ``schema_ddl`` instead of a
+parquet schema-inference job; ledgers written before ``schema_ddl`` was
+stored for every stage fall back to inference.
 """
 
 from __future__ import annotations
 
 import json
 import time
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .pipeline import (
     DOC_THRESHOLD,
@@ -38,6 +49,12 @@ from .pipeline import (
     resolve_documents,
     resolve_entities,
 )
+from .session import advisory_partitions, task_slots
+from .sqlquote import quote_ident, sql_string
+
+
+# the most buckets a stage gets unless the caller asks for more
+MAX_BUCKETS = 32
 
 
 def _lineage_path(ledger_dir: str, stage: str) -> Path:
@@ -57,8 +74,20 @@ def _table_name(ledger_dir: str, stage: str) -> str:
     return f"ledger_{h}"
 
 
-def _schema_ddl(schema) -> str:
-    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+def _ddl_type(dt: T.DataType) -> str:
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{quote_ident(f.name)}:{_ddl_type(f.dataType)}"
+            for f in dt.fields) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_ddl_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_ddl_type(dt.keyType)},{_ddl_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def _schema_ddl(schema: T.StructType) -> str:
+    return ", ".join(f"{quote_ident(f.name)} {_ddl_type(f.dataType)}"
                      for f in schema.fields)
 
 
@@ -72,48 +101,77 @@ def _register_bucketed(spark: SparkSession, ledger_dir: str, stage: str,
     sorted) reads — the Iceberg-snapshot analogue for resume."""
     tname = _table_name(ledger_dir, stage)
     if not spark.catalog.tableExists(tname):
-        sort = (f" SORTED BY ({', '.join(meta['sort_by'])})"
+        def cols(names: list[str]) -> str:
+            return ", ".join(map(quote_ident, names))
+
+        sort = (f" SORTED BY ({cols(meta['sort_by'])})"
                 if meta.get("sort_by") else "")
         spark.sql(
-            f"CREATE TABLE {tname} ({meta['schema_ddl']}) USING PARQUET "
-            f"CLUSTERED BY ({', '.join(meta['bucket_by'])}){sort} "
+            f"CREATE TABLE {quote_ident(tname)} ({meta['schema_ddl']}) "
+            f"USING PARQUET CLUSTERED BY ({cols(meta['bucket_by'])}){sort} "
             f"INTO {meta['num_buckets']} BUCKETS "
-            f"LOCATION '{_data_path(ledger_dir, stage)}'"
+            f"LOCATION {sql_string(_data_path(ledger_dir, stage))}"
         )
     return spark.table(tname)
 
 
-def partition_counters(df: DataFrame) -> list[dict]:
-    """Per-partition row counts (the lineage evidence the judge can audit)."""
-    counts = (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .count()
-        .collect()
-    )
-    return [{"partition": r["_pid"], "rows": r["count"]} for r in
-            sorted(counts, key=lambda r: r["_pid"])]
+def _read_stage(spark: SparkSession, ledger_dir: str, stage: str,
+                meta: dict) -> DataFrame:
+    """A plain (non-catalog) read of a stage's parquet: with the stored
+    schema, so no schema-inference job runs; a ledger written before
+    ``schema_ddl`` was stored for every stage still infers it."""
+    reader = spark.read
+    if meta.get("schema_ddl"):
+        reader = reader.schema(meta["schema_ddl"])
+    return reader.parquet(_data_path(ledger_dir, stage))
 
 
-def stage_complete(ledger_dir: str, stage: str,
-                   input_fingerprint: str | None = None) -> bool:
+def _write_counters(spark: SparkSession, tag: str) -> list[dict]:
+    """Per-partition row counts of a stage write, from the write's own task
+    metrics: no extra Spark job. ``tag`` marks the write's jobs; the last of
+    them is the write job itself (AQE runs the shuffle stages first, as
+    jobs of their own), and its result stage's tasks wrote the files. One
+    entry per write task index, from the successful attempt."""
+    jsc = spark.sparkContext._jsc.sc()
+    # the status store is fed by the listener bus; drain it so the write's
+    # task-end events are recorded before reading them
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = jsc.statusTracker(), jsc.statusStore()
+    jobs = list(tracker.getJobIdsForTag(tag))
+    if not jobs:
+        return []
+    stage = max(tracker.getJobInfo(max(jobs)).get().stageIds())
+    rows: dict[int, int] = {}
+    for attempt in range(store.lastStageAttempt(stage).attemptId() + 1):
+        tasks = store.taskList(stage, attempt, 2 ** 31 - 1)
+        for t in range(tasks.size()):
+            task = tasks.apply(t)
+            if task.status() == "SUCCESS" and task.taskMetrics().isDefined():
+                rows.setdefault(task.index(), task.taskMetrics().get()
+                                .outputMetrics().recordsWritten())
+    return [{"partition": i, "rows": n} for i, n in sorted(rows.items())]
+
+
+def _complete_meta(ledger_dir: str, stage: str,
+                   input_fingerprint: str | None = None) -> dict | None:
+    """The stage's lineage record if it is COMPLETE (for
+    ``input_fingerprint``, when given), else None."""
     p = _lineage_path(ledger_dir, stage)
     if not p.exists():
-        return False
+        return None
     meta = json.loads(p.read_text())
     if meta.get("status") != "COMPLETE":
-        return False
+        return None
     if input_fingerprint is not None and meta.get("input_fingerprint") != input_fingerprint:
-        return False
-    return True
+        return None
+    return meta
 
 
 def run_stage(spark: SparkSession, ledger_dir: str, stage: str,
               build: "callable[[], DataFrame]",
               input_fingerprint: str | None = None,
-              partition_by: list[str] | None = None,
               bucket_by: list[str] | None = None,
-              num_buckets: int = 32,
+              num_buckets: int | None = None,
               sort_by: list[str] | None = None,
               lineage_counters: bool = True) -> DataFrame:
     """Execute (or resume) one pipeline stage.
@@ -127,69 +185,87 @@ def run_stage(spark: SparkSession, ledger_dir: str, stage: str,
     groupBy over a blocks stage then need no exchange. This is the
     materialization barrier ``localCheckpoint`` cannot be (checkpoints drop
     outputPartitioning); on a cluster the same write is the Iceberg
-    bucket-partitioned snapshot.
+    bucket-partitioned snapshot. ``num_buckets`` defaults to one wave of
+    write tasks: max(task slots, advisory-size partitions of the stage's
+    estimate), at most MAX_BUCKETS. Every bucket is one file and one task
+    in the write and in each consumer; for a small stage those fixed
+    per-task costs, not its rows, set its time.
+
+    ``lineage_counters=False`` (the EPHEMERAL in-process ledger,
+    pipeline._ephemeral_ledger_runner) records ``rows``/``partitions`` as
+    null: a fresh-dir-per-run ledger is an execution layout, not an audit
+    trail, so it skips even the listener-bus drain the counters need.
     """
-    data = _data_path(ledger_dir, stage)
-    if stage_complete(ledger_dir, stage, input_fingerprint):
-        meta = json.loads(_lineage_path(ledger_dir, stage).read_text())
+    meta = _complete_meta(ledger_dir, stage, input_fingerprint)
+    if meta is not None:
         if meta.get("bucket_by"):
             return _register_bucketed(spark, ledger_dir, stage, meta)
-        return spark.read.parquet(data)
+        return _read_stage(spark, ledger_dir, stage, meta)
     t0 = time.time()
-    # label every job this stage triggers (write, lineage audit) so the UI /
-    # REST status API attributes wall time to pipeline stages, not to
-    # anonymous saveAsTable futures — observability for the scaling report
-    spark.sparkContext.setJobDescription(f"stage:{stage}")
-    df = build()
-    if bucket_by:
-        tname = _table_name(ledger_dir, stage)
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        # pre-repartition on the bucket hash (repartition and bucketBy share
-        # pmod(murmur3, n)) so each task holds exactly one bucket => ONE
-        # file per bucket, the layout under which Spark trusts the
-        # per-bucket sortBy order on read (SortExec elided for consumers)
-        writer = (df.repartition(num_buckets, *[F.col(c) for c in bucket_by])
-                  .write.mode("overwrite").option("path", data)
-                  .bucketBy(num_buckets, *bucket_by))
-        if sort_by:
-            writer = writer.sortBy(*sort_by)
-        writer.saveAsTable(tname)
-        out = spark.table(tname)
-    else:
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data)
-        out = spark.read.parquet(data)
-    # ONE job for the lineage evidence: rows derive from the per-partition
-    # counters instead of a separate count(). ``lineage_counters=False``
-    # (the EPHEMERAL in-process ledger, pipeline._ephemeral_ledger_runner)
-    # skips that job entirely — a fresh-dir-per-run ledger is an execution
-    # layout, not an audit trail, and the extra full read of every stage is
-    # a fixed serial cost that eats strong-scaling headroom at high core
-    # counts. Durable (resumable/incremental) ledgers keep it on.
-    counters = partition_counters(out) if lineage_counters else None
+    sc = spark.sparkContext
+    # label every job this stage triggers so the UI / REST status API
+    # attributes wall time to pipeline stages, not to anonymous
+    # saveAsTable futures — observability for the scaling report
+    sc.setJobDescription(f"stage:{stage}")
+    try:
+        df = build()
+        meta = {"schema_ddl": _schema_ddl(df.schema)}
+        if bucket_by:
+            num_buckets = num_buckets or min(
+                MAX_BUCKETS,
+                max(task_slots(spark), advisory_partitions(df)))
+            meta.update({
+                "bucket_by": list(bucket_by),
+                "num_buckets": num_buckets,
+                "sort_by": list(sort_by) if sort_by else None,
+            })
+        # a job TAG (not a job group: the caller may own the group) finds
+        # the write's own jobs for the counters; build() ran before it, so
+        # eager probes inside build carry no tag
+        tag = f"spikex-stage-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            if bucket_by:
+                tname = _table_name(ledger_dir, stage)
+                spark.sql(f"DROP TABLE IF EXISTS {quote_ident(tname)}")
+                # pre-repartition on the bucket hash (repartition and
+                # bucketBy share pmod(murmur3, n)) so each task holds
+                # exactly one bucket => ONE file per bucket, the layout
+                # under which Spark trusts the per-bucket sortBy order on
+                # read (SortExec elided for consumers)
+                writer = (df.repartition(num_buckets, *[
+                              F.col(quote_ident(c)) for c in bucket_by])
+                          .write.mode("overwrite")
+                          .option("path", _data_path(ledger_dir, stage))
+                          .bucketBy(num_buckets, *bucket_by))
+                if sort_by:
+                    writer = writer.sortBy(*sort_by)
+                writer.saveAsTable(tname)
+                out = spark.table(tname)
+            else:
+                df.write.mode("overwrite").parquet(
+                    _data_path(ledger_dir, stage))
+                out = _read_stage(spark, ledger_dir, stage, meta)
+        finally:
+            sc.removeJobTag(tag)
+        counters = _write_counters(spark, tag) if lineage_counters else None
+    finally:
+        sc.setJobDescription(None)
     meta = {
         "stage": stage,
         "status": "COMPLETE",
-        "rows": sum(p["rows"] for p in counters) if counters else None,
+        "rows": (sum(p["rows"] for p in counters)
+                 if counters is not None else None),
         "partitions": counters,
         "input_fingerprint": input_fingerprint,
         "wall_seconds": round(time.time() - t0, 3),
         "written_at_epoch": int(time.time()),
         "schema": out.schema.simpleString(),
+        **meta,
     }
-    if bucket_by:
-        meta.update({
-            "bucket_by": list(bucket_by),
-            "num_buckets": num_buckets,
-            "sort_by": list(sort_by) if sort_by else None,
-            "schema_ddl": _schema_ddl(out.schema),
-        })
     p = _lineage_path(ledger_dir, stage)
     p.parent.mkdir(parents=True, exist_ok=True)
     p.write_text(json.dumps(meta, indent=1))
-    spark.sparkContext.setJobDescription(None)
     return out
 
 
@@ -200,11 +276,12 @@ def _read_complete(spark: SparkSession, ledger_dir: str,
     partial parquet under <stage>/data; silently unioning that with the new
     batch would mark the NEW ledger COMPLETE while permanently dropping old
     rows. The incremental contract is 'extend a COMPLETED ledger'."""
-    if not stage_complete(ledger_dir, stage):
+    meta = _complete_meta(ledger_dir, stage)
+    if meta is None:
         raise ValueError(
             f"stage {stage!r} in ledger {ledger_dir!r} has no COMPLETE "
             "marker — finish (or re-run) the bootstrap before extending it")
-    return spark.read.parquet(_data_path(ledger_dir, stage))
+    return _read_stage(spark, ledger_dir, stage, meta)
 
 
 def _ledger_runner(spark: SparkSession, ledger_dir: str,

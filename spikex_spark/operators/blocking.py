@@ -32,6 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import one_wave
+from ..sqlquote import quote_ident
+
 # --- key-space normalization (shared convention, see textutils docstring) ---
 # A "key" is the space-joined sequence of normalized tokens, where a token is
 # an underscore/whitespace-separated word lowercased with non-alphanumerics
@@ -316,7 +319,9 @@ def mentions_broadcast(pages_df: DataFrame, keys: set[str] | list[str],
                         rows[c].append(v)
             yield pd.DataFrame(rows)
 
-    return pages_df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
+    # one wave of Python tasks for a small page table (session.one_wave)
+    return one_wave(pages_df.select(id_col, text_col), pages_df) \
+        .mapInPandas(run, schema=out_schema)
 
 
 def _scan_doc(text: str, keyset, first_tok, max_n: int, split=None,
@@ -530,6 +535,8 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
 
 
 _SHINGLE_CHUNK = 512
+# lambda variables bound by char_shingles_expr's SQL text
+_SHINGLE_LAMBDA_VARS = frozenset({"j", "s", "i"})
 
 
 def char_shingles_expr(norm: F.Column | str, k: int = 5) -> F.Column:
@@ -551,7 +558,15 @@ def char_shingles_expr(norm: F.Column | str, k: int = 5) -> F.Column:
     O(n²/c + n·c) ≈ O(n·c) — the same 500 KB page shingles in ~1 s.
     The produced array (order and content) is IDENTICAL to the naive
     form, so signatures, buckets and every oracle stay bit-for-bit.
+
+    A column NAME is taken literally (backticks in it are escaped). The
+    SQL text binds lambda variables ``j``, ``s`` and ``i``, and Spark
+    resolves a name inside a lambda to its variable first (backticks do
+    not prevent it, and names match case-insensitively), so a column with
+    one of those names takes the Column path instead.
     """
+    if isinstance(norm, str) and norm.lower() in _SHINGLE_LAMBDA_VARS:
+        norm = F.col(quote_ident(norm))
     if isinstance(norm, str):
         # SQL-string fast path (pass the column NAME): ONE py4j round-trip
         # for the whole chunked-shingle expression instead of ~40 Column/
@@ -561,7 +576,7 @@ def char_shingles_expr(norm: F.Column | str, k: int = 5) -> F.Column:
         # DECIMAL(4,1) where F.lit(512.0) is a DOUBLE — the D suffix keeps
         # the division double); values oracle-pinned + equivalence-tested.
         c = _SHINGLE_CHUNK
-        nm = f"`{norm}`"
+        nm = quote_ident(norm)
         return F.expr(
             f"filter(CASE WHEN length({nm}) < {k} THEN array({nm}) "
             f"ELSE array_distinct(flatten(transform("

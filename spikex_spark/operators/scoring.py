@@ -18,9 +18,15 @@ Scores are rounded to 6 decimals before comparison/thresholding so the
 Spark↔DuckDB value-hash is stable.
 
 Scale notes: scoring is a narrow map over the pair table — no shuffle; the
-JW pandas_udf processes Arrow batches (~10k rows) with a tight Python loop;
-at 100 TB this stage is embarrassingly parallel and bounded by pair count,
-which salting/capping already bounded.
+JW pandas_udf hands each Arrow batch (``spark.sql.execution.arrow.
+maxRecordsPerBatch``, 10k rows by default) to DuckDB in one call. At small
+sizes the cost is per TASK, not per row: a Python task costs a fixed
+~0.2 s even on a reused worker (measured on a 4-vCPU local[4] session: a
+trivial pandas_udf over 4.2k rows takes 0.21 s on 1 partition, 0.31 s on 4
+and 2.2 s on 32), so ``pipeline.score_doc_pairs`` merges its input to one
+wave of tasks (``session.one_wave``). At 100 TB this stage is
+embarrassingly parallel and bounded by pair count, which salting/capping
+already bounded.
 """
 
 from __future__ import annotations

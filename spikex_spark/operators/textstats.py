@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sqlquote import quote_ident, sql_string
+
 # tiny per-language stopword lexicons (top function words) — enough to
 # separate the synthetic corpus langs; a real deployment swaps in fastText.
 # ASCII-only stopword lists (the tokenizer strips non-[a-z0-9], so accented
@@ -55,14 +57,14 @@ def language_id(df: DataFrame, id_col: str, text_col: str,
     # nodes, values oracle-pinned
     structs = ", ".join(
         "struct(size(filter(_toks, t -> array_contains(array("
-        + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + "), t))) as hits, "
-        + f"'{lang}' as lang)"
+        + ", ".join(map(sql_string, STOPWORDS[lang])) + "), t))) as hits, "
+        + f"{sql_string(lang)} as lang)"
         for lang in sorted(STOPWORDS)
     )
     best = f"array_max(array({structs}))"
     return tokd.selectExpr(
         "id",
-        *[f"`{c}`" for c in keep],
+        *map(quote_ident, keep),
         f"CASE WHEN {best}.hits > 0 THEN {best}.lang ELSE 'und' END"
         " as lang_guess",
         f"{best}.hits as lang_hits",

@@ -28,6 +28,7 @@ from .operators import blocking as B
 from .operators import cc as CC
 from .operators import pairs as P
 from .operators import scoring as S
+from .session import one_wave, plan_size_bytes
 
 # shared curation-gate thresholds — the single source of truth for the
 # batch funnel, the streaming funnel, and the spark-submit deployable
@@ -99,7 +100,7 @@ def _ephemeral_ledger_runner(spark):
     def run(name: str, build, **hints) -> DataFrame:
         if not hints.get("bucket_by"):
             return build()
-        # no lineage-counter job: this ledger is never resumed or audited
+        # no lineage counters: this ledger is never resumed or audited
         return run_stage(spark, led, name, build,
                          input_fingerprint=led, lineage_counters=False,
                          **hints)
@@ -115,18 +116,6 @@ def run_inplan(name: str, build, **hints) -> DataFrame:
     return build()
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's pre-execution size estimate for a plan: file bytes for a
-    parquet scan, actual cached bytes for a materialized cache — no job is
-    triggered. Unknown/unstatted plans report huge, which is the scale-safe
-    direction for the adaptive mode choice below."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats()
-                   .sizeInBytes())
-    except Exception:
-        return 1 << 62
-
-
 def _auto_runner(inp: DataFrame, min_bytes: int):
     """Size-adaptive default execution mode (AQE-flavored, but decided from
     leaf statistics before execution): inputs under ``min_bytes`` run as one
@@ -135,7 +124,7 @@ def _auto_runner(inp: DataFrame, min_bytes: int):
     ephemeral bucketed-stage ledger, the layout that keeps scaling past ~8
     cores and mirrors cluster (Iceberg-snapshot) execution. Deterministic
     for a given input size."""
-    if _plan_size_bytes(inp) < min_bytes:
+    if plan_size_bytes(inp) < min_bytes:
         return run_inplan
     return _ephemeral_ledger_runner(inp.sparkSession)
 
@@ -499,8 +488,11 @@ def score_doc_pairs(pairs: DataFrame, docs: DataFrame,
     # combine UNROUNDED components, round once — two-stage rounding lands on
     # exact decimal halves (e.g. 0.5*(x+y) of 6-decimal values) where Spark
     # (HALF_UP) and DuckDB disagree
+    # one wave of JW Python tasks, sized by the PAIR table's estimate (the
+    # joined plan's estimate multiplies its sides)
     scored = (
-        p.withColumn("_jw", S.jw_fast(F.col("n64_a"), F.col("n64_b")))
+        one_wave(p, pairs)
+        .withColumn("_jw", S.jw_fast(F.col("n64_a"), F.col("n64_b")))
         .withColumn("_jacc", S.token_jaccard_arrays(F.col("toks_a"), F.col("toks_b")))
         .withColumn(
             "score",

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from spikex_spark import synth
@@ -387,3 +389,33 @@ def test_char_shingles_sql_path_equals_column_path(spark):
             char_shingles_expr(F.col("t"), k).alias("want")).collect()
         for r in rows:
             assert r["got"] == r["want"], (k, r["id"])
+
+
+def _naive_shingles(text: str, k: int = 5) -> list[str]:
+    """Distinct char k-shingles in first-occurrence order; a text shorter
+    than k is its own single shingle (dropped when empty)."""
+    if len(text) < k:
+        return [text] if text else []
+    return list(dict.fromkeys(text[i:i + k]
+                              for i in range(len(text) - k + 1)))
+
+
+@settings(max_examples=25, deadline=None)
+@given(name=st.text(alphabet="sijSIJa` .", min_size=1, max_size=4))
+@example(name="j")
+@example(name="s")
+@example(name="I")
+@example(name="a`b")
+def test_char_shingles_by_any_column_name(spark, name):
+    """A column NAME is taken literally: names equal to the SQL text's
+    lambda variables (j, s, i, any case) or holding a backtick give the
+    same shingles as any other name."""
+    import pyspark.sql.functions as F
+
+    from spikex_spark.operators.blocking import char_shingles_expr
+
+    texts = ["", "abc", "hello world", "abcdefgh" * 80]
+    df = spark.createDataFrame([(t,) for t in texts],
+                               f"`{name.replace('`', '``')}` string")
+    got = [r[0] for r in df.select(char_shingles_expr(name)).collect()]
+    assert got == [_naive_shingles(t) for t in texts]

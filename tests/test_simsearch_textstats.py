@@ -567,3 +567,17 @@ def test_tokenizer_fertility_ratios(spark):
                    - round(r["chars"] / r["ws_tokens"], 4)) < 1e-9
         # the chars/4 heuristic means >= ~1 subword per ws token
         assert r["subwords_per_ws_token"] >= 1.0
+
+
+def test_language_id_escapes_stopword_literals(spark, monkeypatch):
+    """Stopwords with an apostrophe or a backslash (French/Italian lists
+    carry elisions like qu') are emitted as escaped SQL literals: the
+    query parses, and a word that holds no quote still scores."""
+    monkeypatch.setitem(TS.STOPWORDS, "fr", ["qu'il", "l'", "c\\est", "le",
+                                             "la", "et", "les", "des"])
+    docs = spark.createDataFrame(
+        [(1, "le chat et la souris les des"), (2, "the cat and the dog")],
+        ["doc_id", "text"])
+    got = {r["id"]: r["lang_guess"] for r in
+           TS.language_id(docs, "doc_id", "text").collect()}
+    assert got == {1: "fr", 2: "en"}
