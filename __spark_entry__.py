@@ -2329,13 +2329,29 @@ WHERE kind = 'page'
 # Spark query implementations
 # ---------------------------------------------------------------------------
 
-# per-process METADATA cache for the driver tables: (path, parallelism) ->
-# (schema, needs_fanout). This is catalog metadata (what a metastore serves
-# on a cluster), NOT result caching — every execution still scans the
-# parquet file. Without it each query CONSTRUCTION pays a footer-read
-# schema inference plus a df.rdd physical-planning round-trip
-# (~0.14 s/table, inside every timed bench rep).
+# per-process METADATA cache for the driver tables: (path, mtime,
+# parallelism) -> (schema, needs_fanout). This is catalog metadata (what a
+# metastore serves on a cluster), NOT result caching — every execution
+# still scans the parquet file. Without it each query CONSTRUCTION pays a
+# footer-read schema inference plus a df.rdd physical-planning round-trip
+# (~0.14 s/table, inside every timed bench rep). The mtime in the key
+# makes a rewritten table (new schema, new files) miss the cache.
 _READ_META: dict = {}
+
+
+def _table_mtime(path: str) -> int | None:
+    """Latest modification time (ns) of a parquet file, or of a parquet
+    directory and the files directly in it; None if it cannot be read."""
+    import os
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return st.st_mtime_ns
+        with os.scandir(path) as it:
+            return max([st.st_mtime_ns]
+                       + [e.stat().st_mtime_ns for e in it])
+    except OSError:
+        return None
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2351,11 +2367,12 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = f"{sf_dir}/{name}.parquet"
     target = spark.sparkContext.defaultParallelism
-    meta = _READ_META.get((path, target))
+    key = (path, _table_mtime(path), target)
+    meta = _READ_META.get(key)
     if meta is None:
         df = spark.read.parquet(path)
         needs_fanout = df.rdd.getNumPartitions() < target
-        _READ_META[(path, target)] = (df.schema, needs_fanout)
+        _READ_META[key] = (df.schema, needs_fanout)
         return df.repartition(target) if needs_fanout else df
     schema, needs_fanout = meta
     df = spark.read.schema(schema).parquet(path)
@@ -2485,10 +2502,11 @@ def _read_rel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Shares ``_READ_META``'s schema cache (no fanout decision needed here).
     """
     path = f"{sf_dir}/{name}.parquet"
-    meta = _READ_META.get((path, "rel"))
+    key = (path, _table_mtime(path), "rel")
+    meta = _READ_META.get(key)
     if meta is None:
         df = spark.read.parquet(path)
-        _READ_META[(path, "rel")] = (df.schema, False)
+        _READ_META[key] = (df.schema, False)
         return df
     return spark.read.schema(meta[0]).parquet(path)
 
@@ -7743,8 +7761,9 @@ def _ledger_scratch() -> dict:
     the identical local-mode reasoning). These dirs are per-process
     (never resumed across runs), so tmpfs lifetime is exactly right."""
     import os
-    scratch = os.environ.get(
-        "SPARK_LOCAL_DIRS", "/dev/shm/spark-local").split(",")[0]
+
+    from spikex_spark.session import local_scratch
+    scratch = local_scratch()
     try:
         os.makedirs(scratch, exist_ok=True)
         return {"dir": scratch}
@@ -7826,15 +7845,9 @@ def _er_pages_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     if sf_dir not in _ER_BLOCKS_LEDGER:
         _ER_BLOCKS_LEDGER[sf_dir] = tempfile.mkdtemp(prefix="er_pages_ledger_", **_ledger_scratch())
     ledger = _ER_BLOCKS_LEDGER[sf_dir]
-    # lineage_counters=False: this ledger is per-process EPHEMERAL (mkdtemp,
-    # never resumed or audited), so it skips even the listener-bus drain the
-    # per-partition counters need (they are read from the write's own task
-    # metrics); durable resumable ledgers (lineage.resolve_*_resumable)
-    # keep their counters on.
     return run_stage(spark, ledger, "20_blocks", build,
                      input_fingerprint=sf_dir, bucket_by=["block_key"],
-                     num_buckets=32, sort_by=["block_key", "surface", "id"],
-                     lineage_counters=False)
+                     num_buckets=32, sort_by=["block_key", "surface", "id"])
 
 
 def _er_pages_surface_scores(blocks_pairs_surfaces: DataFrame) -> DataFrame:

@@ -172,8 +172,7 @@ def run_stage(spark: SparkSession, ledger_dir: str, stage: str,
               input_fingerprint: str | None = None,
               bucket_by: list[str] | None = None,
               num_buckets: int | None = None,
-              sort_by: list[str] | None = None,
-              lineage_counters: bool = True) -> DataFrame:
+              sort_by: list[str] | None = None) -> DataFrame:
     """Execute (or resume) one pipeline stage.
 
     ``build`` constructs the stage DataFrame lazily; it only runs when the
@@ -190,11 +189,6 @@ def run_stage(spark: SparkSession, ledger_dir: str, stage: str,
     estimate), at most MAX_BUCKETS. Every bucket is one file and one task
     in the write and in each consumer; for a small stage those fixed
     per-task costs, not its rows, set its time.
-
-    ``lineage_counters=False`` (the EPHEMERAL in-process ledger,
-    pipeline._ephemeral_ledger_runner) records ``rows``/``partitions`` as
-    null: a fresh-dir-per-run ledger is an execution layout, not an audit
-    trail, so it skips even the listener-bus drain the counters need.
     """
     meta = _complete_meta(ledger_dir, stage, input_fingerprint)
     if meta is not None:
@@ -248,14 +242,13 @@ def run_stage(spark: SparkSession, ledger_dir: str, stage: str,
                 out = _read_stage(spark, ledger_dir, stage, meta)
         finally:
             sc.removeJobTag(tag)
-        counters = _write_counters(spark, tag) if lineage_counters else None
+        counters = _write_counters(spark, tag)
     finally:
         sc.setJobDescription(None)
     meta = {
         "stage": stage,
         "status": "COMPLETE",
-        "rows": (sum(p["rows"] for p in counters)
-                 if counters is not None else None),
+        "rows": sum(p["rows"] for p in counters),
         "partitions": counters,
         "input_fingerprint": input_fingerprint,
         "wall_seconds": round(time.time() - t0, 3),
@@ -311,15 +304,14 @@ def resolve_entities_resumable(spark: SparkSession, pages: DataFrame,
                                text_col: str = "text",
                                cfg=None) -> DataFrame:
     """The north-rule title-blocking pipeline split into ledgered stages:
-    mentions → blocks → star_edges (or pairs → scores) → clusters. Kill it
-    between stages and rerun — completed stages load from the ledger (on a
-    cluster this is the Iceberg snapshot per stage). Same definition as the
+    10_mentions → 20_blocks → 30_star_edges → 50_clusters. Kill it between
+    stages and rerun — completed stages load from the ledger (on a cluster
+    this is the Iceberg snapshot per stage). Same definition as the
     one-shot ``pipeline.resolve_entities`` — only the stage runner differs.
 
-    ``cfg`` (ERConfig): tunes threshold/caps and selects the edge strategy —
-    star_collapse=True (default) ledgers the reduced star-edge stage and
-    skips the O(m²) pair/score ledgers entirely; star_collapse=False ledgers
-    the full enumeration (pairs, scores) for audits that need per-pair rows.
+    ``cfg`` (ERConfig) tunes threshold and caps. The ledger holds the
+    reduced star-edge stage, never the O(m²) per-block pair enumeration;
+    per-pair rows are ``pipeline.scored_pairs``.
     """
     return resolve_entities(pages, titles, cfg=cfg or ERConfig(),
                             id_col=id_col, text_col=text_col,
@@ -355,11 +347,10 @@ def resolve_entities_incremental(spark: SparkSession, pages_new: DataFrame,
     old_ids = (_read_complete(spark, old_ledger, "50_clusters")
                .select(F.col(id_col).alias("id")))
     run = _ledger_runner(spark, new_ledger, fingerprint)
-    blocks, scored = _er_stage_results(pages_new, titles, cfg, id_col,
-                                       text_col, run,
-                                       prior_members=old_members)
+    blocks = _er_stage_results(pages_new, titles, cfg, id_col, text_col, run,
+                               prior_members=old_members)
     all_ids = old_ids.unionByName(pages_new.select(F.col(id_col).alias("id")))
-    return cluster_from_blocks(blocks, scored, all_ids, cfg, run, id_col)
+    return cluster_from_blocks(blocks, all_ids, cfg, run, id_col)
 
 
 def resolve_documents_resumable(spark: SparkSession, docs: DataFrame,

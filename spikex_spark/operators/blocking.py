@@ -615,7 +615,7 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str,
     doc, kept map-side. ``shingle_df`` ≡ explode of this; docs whose
     normalized text is empty (no shingles) are dropped in both.
 
-    This is the scale-path input for MinHash (`minhash_signatures_arrays`)
+    This is the scale-path input for MinHash (``minhash_sig_expr``)
     and exact-Jaccard verification (`array_intersect` on two doc rows):
     neither needs one-row-per-shingle, so keeping the set as an array
     avoids the explode and the groupBy shuffle entirely.
@@ -638,8 +638,8 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str,
 def minhash_sig_expr(shingles: F.Column, num_hashes: int = 16) -> F.Column:
     """MinHash signature as ONE column expression (array<long> of running
     band minima) over a shingle-array column — the fusable form for
-    map-only/streaming stages; ``minhash_signatures_arrays`` is its
-    DataFrame wrapper."""
+    map-only/streaming stages. min() is duplicate-invariant, so its values
+    are bit-identical to ``minhash_signatures`` (asserted by test)."""
     if num_hashes > len(MINHASH_A):
         raise ValueError(f"at most {len(MINHASH_A)} hashes supported")
     a_lit = F.array(*[F.lit(a) for a in MINHASH_A[:num_hashes]])
@@ -660,35 +660,6 @@ def minhash_sig_expr(shingles: F.Column, num_hashes: int = 16) -> F.Column:
                        F.lit(MINHASH_P)),
             ),
         ),
-    )
-
-
-def minhash_signatures_arrays(arr_df: DataFrame,
-                              num_hashes: int = 16) -> DataFrame:
-    """Map-side MinHash over ``shingle_arrays`` output: (id, mh0..mh{n-1}).
-
-    ZERO shuffle — one `aggregate` pass per row replaces the explode +
-    groupBy of ``minhash_signatures``: md5 once per shingle, then all
-    ``num_hashes`` running minima update per element. min() is
-    duplicate-invariant, so values are bit-identical to the exploded path
-    (asserted by test) and the DuckDB oracle SQL needs no change.
-
-    Measured trade (sf0.1, local[32]): ~2× the CPU of ``minhash_signatures``
-    — higher-order functions evaluate interpreted, while the exploded path
-    runs md5+pmod inside whole-stage codegen and its map-side partial agg
-    shrinks the shuffle to ONE row per doc anyway. The exploded path is
-    therefore the default everywhere; use this variant only when even a
-    one-row-per-doc shuffle is unwanted (e.g. signature computation fused
-    into a wider map-only stage).
-    """
-    # own projection: _sig is expensive and referenced num_hashes times —
-    # CollapseProject keeps it single-eval (SPARK-36718)
-    sigged = arr_df.select(
-        "id", minhash_sig_expr(F.col("shingles"), num_hashes).alias("_sig"))
-    return sigged.select(
-        "id",
-        *[F.element_at(F.col("_sig"), i + 1).alias(f"mh{i}")
-          for i in range(num_hashes)],
     )
 
 

@@ -185,13 +185,6 @@ def score_pairs(pairs: DataFrame, a_col: str = "surface_a",
     return pairs.join(scored_uniq, [a_col, b_col])
 
 
-def match_edges(scored: DataFrame, threshold: float = 0.75) -> DataFrame:
-    """Pairs above threshold become edges for the clustering stage."""
-    return scored.where(F.col("score") >= threshold).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "score"
-    )
-
-
 @pandas_udf(T.ArrayType(T.DoubleType()))
 def me_max_sims_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
     """Per-``ta``-token maximum Jaro-Winkler against the ``tb`` tokens

@@ -1,4 +1,4 @@
-"""End-to-end ER pipeline: extract → block → pair → score → cluster.
+"""End-to-end ER pipeline: extract → block → score → cluster.
 
 The flagship query (BASELINE.json north_rule). Composable: every stage is a
 ``DataFrame -> DataFrame`` transform, so Catalyst sees ONE logical plan and
@@ -9,6 +9,9 @@ Two entry points:
 
 * ``resolve_entities``   — title-key blocking over a `pages`-shaped table
   (url, text, ...) against a `titles` dimension; the reference-parity path.
+  Its one edge path is the star-collapsed edge set (``_star_edges``): the
+  O(m²) per-block pair enumeration is built only for the pairwise view
+  (``scored_pairs``), never for clustering.
 * ``resolve_documents``  — self-contained blocking (token-key + optional
   MinHash/LSH channel) for a generic documents table with no title
   dimension; used by the driver correctness gate over
@@ -28,7 +31,7 @@ from .operators import blocking as B
 from .operators import cc as CC
 from .operators import pairs as P
 from .operators import scoring as S
-from .session import one_wave, plan_size_bytes
+from .session import local_scratch, one_wave, plan_size_bytes
 
 # shared curation-gate thresholds — the single source of truth for the
 # batch funnel, the streaming funnel, and the spark-submit deployable
@@ -81,9 +84,7 @@ def _ephemeral_ledger_runner(spark):
     # lineage.resolve_*_resumable, which stays wherever the user put it
     # (cluster: Iceberg/object storage).
     if spark.sparkContext.master.startswith("local"):
-        # SPARK_LOCAL_DIRS is a comma-separated list — take the first
-        scratch = os.environ.get(
-            "SPARK_LOCAL_DIRS", "/dev/shm/spark-local").split(",")[0]
+        scratch = local_scratch()
         os.makedirs(scratch, exist_ok=True)
         led = tempfile.mkdtemp(prefix="er_stage_ledger_", dir=scratch)
     else:
@@ -100,9 +101,7 @@ def _ephemeral_ledger_runner(spark):
     def run(name: str, build, **hints) -> DataFrame:
         if not hints.get("bucket_by"):
             return build()
-        # no lineage counters: this ledger is never resumed or audited
-        return run_stage(spark, led, name, build,
-                         input_fingerprint=led, lineage_counters=False,
+        return run_stage(spark, led, name, build, input_fingerprint=led,
                          **hints)
 
     return run
@@ -139,9 +138,6 @@ class ERConfig:
     # dictionaries up to this many keys ship into the Arrow scan stage
     # (reference broadcast-trie strategy); larger ones use the n-gram join
     broadcast_keys_max: int = 2_000_000
-    # clusters via star-collapsed edges (see _star_edges) instead of the
-    # full per-pair edge enumeration — identical components, O(m+g²) edges
-    star_collapse: bool = True
     # inputs at least this big default to ephemeral bucketed-ledger
     # execution (_auto_runner); smaller ones run as one fused plan
     ledger_min_bytes: int = 256 << 20
@@ -176,11 +172,13 @@ def _mentions(pages: DataFrame, keys: DataFrame, cfg: ERConfig,
 def _er_stage_results(pages: DataFrame, titles: DataFrame, cfg: ERConfig,
                       id_col: str, text_col: str, run,
                       prior_members: DataFrame | None = None
-                      ) -> tuple[DataFrame, DataFrame]:
-    """Shared stage graph (mentions → blocks → pairs → scores) behind a
+                      ) -> DataFrame:
+    """Shared front half (mentions → salted blocks) behind a
     ``run(name, build)`` hook: identity for the one-shot path,
     ``lineage.run_stage`` for the ledgered/resumable path — ONE definition
-    of the flagship pipeline, two physical execution modes.
+    of the flagship pipeline, two physical execution modes. Returns the
+    salted blocks; clustering (``cluster_from_blocks``) and the pairwise
+    view (``scored_pairs``) both start from them.
 
     ``prior_members``: (id, block_key, surface) block members of an already
     resolved corpus (``lineage.resolve_entities_incremental``). Only
@@ -206,7 +204,7 @@ def _er_stage_results(pages: DataFrame, titles: DataFrame, cfg: ERConfig,
             cap=cfg.block_cap, nsalt=cfg.nsalt,
         )
 
-    blocks = run(
+    return run(
         "20_blocks",
         _blocks,
         # ledgered runs write this stage hash-bucketed + sorted so the
@@ -214,19 +212,6 @@ def _er_stage_results(pages: DataFrame, titles: DataFrame, cfg: ERConfig,
         # pre-partitioned, pre-sorted data — no exchange per consumer
         bucket_by=["block_key"], sort_by=["block_key", "salt", "surface"],
     )
-    if cfg.star_collapse:
-        # the star-collapsed clusters stage never reads pairs/scores — a
-        # ledgered runner must NOT eagerly materialize the full O(m²) pair
-        # enumeration star-collapse exists to avoid. Build them lazily
-        # (outside `run`) for the pairwise view only; the resumable path
-        # ledgers the star-edge stage instead (see resolve_entities).
-        pairs = P.candidate_pairs(blocks, salted=True)
-        scored = S.score_pairs(pairs, jw_weight=cfg.jw_weight)
-    else:
-        pairs = run("30_pairs", lambda: P.candidate_pairs(blocks, salted=True))
-        scored = run("40_scores",
-                     lambda: S.score_pairs(pairs, jw_weight=cfg.jw_weight))
-    return blocks, scored
 
 
 def _star_edges(blocks: DataFrame, cfg: ERConfig) -> DataFrame:
@@ -289,31 +274,31 @@ def resolve_entities(pages: DataFrame, titles: DataFrame,
                      stage_runner=None) -> DataFrame:
     """(url, cluster_id, block_key, surface) — entity clusters over pages.
 
+    Stages: ``10_mentions`` → ``20_blocks`` (salted) → ``30_star_edges``
+    → ``50_clusters``. The one edge path is the star-collapsed edge set
+    (``_star_edges``), whose components equal those of the full per-block
+    pair enumeration; that enumeration is never built here.
+
     ``stage_runner(name, build)``: optional per-stage execution hook (see
     ``lineage.resolve_entities_resumable``); default = size-adaptive
     (``_auto_runner``): fused single plan under ``cfg.ledger_min_bytes``,
     ephemeral bucketed-stage ledger above it.
     """
     run = stage_runner or _auto_runner(pages, cfg.ledger_min_bytes)
-    blocks, scored = _er_stage_results(pages, titles, cfg, id_col, text_col,
-                                       run)
+    blocks = _er_stage_results(pages, titles, cfg, id_col, text_col, run)
     all_ids = pages.select(F.col(id_col).alias("id"))
-    return cluster_from_blocks(blocks, scored, all_ids, cfg, run, id_col)
+    return cluster_from_blocks(blocks, all_ids, cfg, run, id_col)
 
 
-def cluster_from_blocks(blocks: DataFrame, scored: DataFrame | None,
-                        all_ids: DataFrame, cfg: ERConfig, run,
-                        id_col: str = "url") -> DataFrame:
-    """The back half of the flagship pipeline (edges → CC → best-key join),
-    reusable over ANY salted block-membership table — the one-shot path,
-    the ledgered path, and the incremental path
+def cluster_from_blocks(blocks: DataFrame, all_ids: DataFrame,
+                        cfg: ERConfig, run, id_col: str = "url") -> DataFrame:
+    """The back half of the flagship pipeline (star edges → CC → best-key
+    join), reusable over ANY salted block-membership table — the one-shot
+    path, the ledgered path, and the incremental path
     (``lineage.resolve_entities_incremental``) all end here."""
-    # star path: ledger the REDUCED edge set (O(m+g²) per cell) — this is
-    # the stage a resumable run restarts from, replacing the pair/score
-    # ledgers of the enumeration path
-    edges = (run("30_star_edges", lambda: _star_edges(blocks, cfg))
-             if cfg.star_collapse
-             else S.match_edges(scored, cfg.threshold))
+    # ledger the REDUCED edge set (O(m+g²) per cell), never the O(m²) pair
+    # enumeration — this is the stage a resumable run restarts from
+    edges = run("30_star_edges", lambda: _star_edges(blocks, cfg))
 
     def _clusters() -> DataFrame:
         assign = CC.cluster_assignments(edges, all_ids)
@@ -543,7 +528,10 @@ def scored_pairs(pages: DataFrame, titles: DataFrame,
                  cfg: ERConfig = ERConfig(),
                  id_col: str = "url", text_col: str = "text") -> DataFrame:
     """The pairwise view (for the F1 gate): (id_a, id_b, block_key, score,
-    is_match). Gold pairs join on (id_a, id_b)."""
-    _, scored = _er_stage_results(pages, titles, cfg, id_col, text_col,
-                                  lambda name, build, **hints: build())
+    is_match). Gold pairs join on (id_a, id_b). It enumerates every pair of
+    each salted block — the O(m²) view clustering never builds."""
+    blocks = _er_stage_results(pages, titles, cfg, id_col, text_col,
+                               run_inplan)
+    scored = S.score_pairs(P.candidate_pairs(blocks, salted=True),
+                           jw_weight=cfg.jw_weight)
     return scored.withColumn("is_match", F.col("score") >= cfg.threshold)

@@ -23,6 +23,12 @@ MAX_LOCAL_HEAP_GB = 48
 LOCAL_SCRATCH = "/dev/shm/spark-local"
 
 
+def local_scratch() -> str:
+    """The directory for local-mode scratch files: the first entry of
+    SPARK_LOCAL_DIRS (a comma-separated list), else LOCAL_SCRATCH."""
+    return (os.environ.get("SPARK_LOCAL_DIRS") or LOCAL_SCRATCH).split(",")[0]
+
+
 def _machine_memory_bytes() -> int | None:
     """Memory this process may use: MemTotal from /proc/meminfo, lowered
     to the cgroup limit when one is set. None where neither is readable."""

@@ -184,9 +184,11 @@ def test_mapside_signatures_bit_identical(spark):
     old = {r["id"]: tuple(r[f"mh{i}"] for i in range(16))
            for r in B.minhash_signatures(
                B.shingle_df(df, "doc_id", "text", 5), 16).collect()}
-    new = {r["id"]: tuple(r[f"mh{i}"] for i in range(16))
-           for r in B.minhash_signatures_arrays(
-               B.shingle_arrays(df, "doc_id", "text", 5), 16).collect()}
+    # the streaming path's signature expression over the shingle arrays
+    new = {r["id"]: tuple(r["sig"])
+           for r in B.shingle_arrays(df, "doc_id", "text", 5).select(
+               "id", B.minhash_sig_expr(F.col("shingles"), 16).alias("sig"))
+           .collect()}
     assert old == new
 
 

@@ -41,28 +41,36 @@ def test_every_page_assigned(spark, pages_df, titles_df):
     assert res.where(F.col("cluster_id").isNull()).count() == 0
 
 
+def _pairwise_clusters(pages_df, titles_df, cfg) -> set:
+    """Oracle: clusters over the FULL per-block pair enumeration — every
+    matching pair of ``scored_pairs`` is an edge, CC runs over every page
+    id. Star contraction must give the same components."""
+    from spikex_spark.operators import cc as CC
+
+    edges = (scored_pairs(pages_df, titles_df, cfg).where("is_match")
+             .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
+    ids = pages_df.select(F.col("url").alias("id"))
+    return {(r["id"], r["cluster_id"])
+            for r in CC.cluster_assignments(edges, ids).collect()}
+
+
 def test_star_collapse_matches_pairwise_clusters(spark, pages_df, titles_df):
     from spikex_spark.pipeline import ERConfig
 
-    star = resolve_entities(pages_df, titles_df,
-                            ERConfig(star_collapse=True)).collect()
-    pair = resolve_entities(pages_df, titles_df,
-                            ERConfig(star_collapse=False)).collect()
+    star = resolve_entities(pages_df, titles_df, ERConfig()).collect()
     # identical assignments, not just identical partitions: both label a
     # cluster by its min member id
     assert ({(r["url"], r["cluster_id"]) for r in star}
-            == {(r["url"], r["cluster_id"]) for r in pair})
+            == _pairwise_clusters(pages_df, titles_df, ERConfig()))
 
 
 def test_star_collapse_under_low_salt_cap(spark, pages_df, titles_df):
     from spikex_spark.pipeline import ERConfig
 
-    cfg_a = ERConfig(star_collapse=True, block_cap=3, nsalt=4)
-    cfg_b = ERConfig(star_collapse=False, block_cap=3, nsalt=4)
-    star = resolve_entities(pages_df, titles_df, cfg_a).collect()
-    pair = resolve_entities(pages_df, titles_df, cfg_b).collect()
+    cfg = ERConfig(block_cap=3, nsalt=4)
+    star = resolve_entities(pages_df, titles_df, cfg).collect()
     assert ({(r["url"], r["cluster_id"]) for r in star}
-            == {(r["url"], r["cluster_id"]) for r in pair})
+            == _pairwise_clusters(pages_df, titles_df, cfg))
 
 
 def test_large_dict_fallback_uses_shuffle_join(spark, pages_df, titles_df,

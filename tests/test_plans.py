@@ -245,11 +245,30 @@ def test_ephemeral_ledger_scratch_env_handling(spark, tmp_path, monkeypatch):
         F.col("id"), (F.col("id") % 2).cast("string").alias("k")),
         bucket_by=["k"], num_buckets=2)
     assert out.count() == 5
-    # ephemeral ledgers skip the lineage-counter audit job: rows is None
+    # ephemeral ledgers record the write's own row counters too
     import json
     from spikex_spark import lineage
     meta = json.loads(lineage._lineage_path(led, "10_x").read_text())
-    assert meta["status"] == "COMPLETE" and meta["rows"] is None
+    assert meta["status"] == "COMPLETE" and meta["rows"] == 5
+
+
+def test_read_meta_sees_rewritten_table(spark, tmp_path):
+    """``_READ_META`` keys on the table's mtime: a driver table rewritten
+    with another schema inside one process is read with its new schema,
+    not the cached one."""
+    import __spark_entry__ as E
+
+    sf = str(tmp_path)
+    path = f"{sf}/t.parquet"
+    spark.range(3).selectExpr("id AS a").write.parquet(path)
+    for read in (E._read, E._read_rel):
+        assert read(spark, sf, "t").columns == ["a"]
+    (spark.range(3).selectExpr("id AS b", "'x' AS c")
+     .write.mode("overwrite").parquet(path))
+    for read in (E._read, E._read_rel):
+        df = read(spark, sf, "t")
+        assert df.columns == ["b", "c"]
+        assert sorted(r["b"] for r in df.collect()) == [0, 1, 2]
 
 
 def test_no_row_python_in_any_contract_query():

@@ -638,9 +638,8 @@ def test_resolve_entities_resumable_matches_oneshot(spark, tmp_path, pages_df, t
     b = {tuple(r) for r in oneshot.collect()}
     assert a == b and len(a) > 0
     stages = ledger_summary(ledger)
-    # default star_collapse: the reduced star-edge stage is ledgered instead
-    # of the O(m²) pairs/scores enumeration (see
-    # test_resumable_entities_star_skips_pair_ledger for both modes)
+    # the reduced star-edge stage is ledgered, never the O(m²) pair
+    # enumeration (see test_resumable_entities_star_skips_pair_ledger)
     assert [m["stage"] for m in stages] == [
         "10_mentions", "20_blocks", "30_star_edges", "50_clusters"
     ]
@@ -654,12 +653,11 @@ def test_resolve_entities_resumable_matches_oneshot(spark, tmp_path, pages_df, t
 
 def test_resumable_entities_star_skips_pair_ledger(spark, tmp_path, pages_df,
                                                    titles_df):
-    """star_collapse (default) must NOT materialize the O(m²) pair/score
-    stages in the ledger — it ledgers the reduced star-edge stage instead —
-    and clusters must equal the one-shot path's. star_collapse=False keeps
-    the full enumeration ledgers for per-pair audits."""
+    """The ledgered entity run must NOT materialize the O(m²) pair/score
+    stages — it ledgers the reduced star-edge stage instead — and clusters
+    must equal the one-shot path's."""
     from spikex_spark.lineage import ledger_summary, resolve_entities_resumable
-    from spikex_spark.pipeline import ERConfig, resolve_entities
+    from spikex_spark.pipeline import resolve_entities
 
     ledger = str(tmp_path / "star_ledger")
     res = resolve_entities_resumable(spark, pages_df, titles_df, ledger,
@@ -670,15 +668,6 @@ def test_resumable_entities_star_skips_pair_ledger(spark, tmp_path, pages_df,
     stages = [m["stage"] for m in ledger_summary(ledger)]
     assert stages == ["10_mentions", "20_blocks", "30_star_edges",
                       "50_clusters"]
-
-    ledger2 = str(tmp_path / "enum_ledger")
-    res2 = resolve_entities_resumable(spark, pages_df, titles_df, ledger2,
-                                      fingerprint="t",
-                                      cfg=ERConfig(star_collapse=False))
-    assert key(res2) == key(oneshot)
-    stages2 = [m["stage"] for m in ledger_summary(ledger2)]
-    assert stages2 == ["10_mentions", "20_blocks", "30_pairs", "40_scores",
-                       "50_clusters"]
 
 
 def test_resume_after_midpipeline_kill(spark, tmp_path, pages_df, titles_df):
