@@ -7789,41 +7789,30 @@ def _er_pages_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # clusters queries share this stage, so a resumed/second call must
         # cost one ledger read, not a discarded plan plus extra jobs
         docs = _read(spark, sf_dir, "documents")
-        # keys + bridge are built DRIVER-SIDE: gen_titles() is already a
-        # 45-row python list, and round-tripping it through createDataFrame
-        # → title_keys → distinct().collect() measured ~5s of serial JVM
-        # overhead (32 python-worker spinups for 41 rows) — the dominant
+        # the key -> block-key map is built DRIVER-SIDE: gen_titles() is
+        # already a 45-row python list, and round-tripping it through
+        # createDataFrame → title_keys → collect() measured ~5s of serial
+        # JVM overhead (32 python-worker spinups for 41 rows) — the dominant
         # cost of this whole stage. title_keys_local is row-for-row equal
         # to the Spark operator (parity-pinned in test_blocking.py); the
         # at-scale title-table path in pipeline.py keeps the Spark chain.
-        key_rows = B.title_keys_local([t["title"] for t in gen_titles()])
-        key_rows += [(k, k, "clean") for k in _EXTRA_MENTION_KEYS]
-        key_list = sorted({k for _t, k, _c in key_rows})
-        # FUSED broadcast scan (extract folded into one Arrow pass) — output
-        # proven identical to extract_native + the n-gram join path by
-        # test_mentions_broadcast_raw_ws_fusion / the unchanged SQL oracle
-        ments = B.mentions_broadcast(docs, key_list, id_col="doc_id",
-                                     text_col="text", raw_ws=True)
-        full_by_title: dict[str, list[str]] = {}
-        clean_by_title: dict[str, list[str]] = {}
-        for t, k, c in key_rows:
-            (full_by_title if c == "full" else clean_by_title) \
-                .setdefault(t, []).append(k)
-        bridge_rows = sorted({
-            (fk, ck)
-            for t, fks in full_by_title.items()
-            for fk in fks
-            for ck in clean_by_title.get(t, [])
-        })
-        bridge = spark.createDataFrame(bridge_rows,
-                                       ["full_key", "clean_key"])
+        by_title: dict[str, dict[str, str]] = {}
+        for t, k, c in B.title_keys_local([t["title"] for t in gen_titles()]):
+            by_title.setdefault(t, {})[c] = k
+        # the extra keys are dictionary entries with no clean channel: they
+        # block under themselves
+        pairs = ([(ks["full"], ks.get("clean", ""))
+                  for ks in by_title.values() if "full" in ks]
+                 + [(k, "") for k in _EXTRA_MENTION_KEYS])
+        key_map = B.block_key_map([f for f, _ in pairs],
+                                  [c for _, c in pairs])
+        # FUSED broadcast scan (extract folded into one Arrow pass) emitting
+        # block members — proven identical to block_members over the
+        # mention scan by test_members_broadcast_equals_block_members, and
+        # checked against the unchanged SQL oracle
         blocks = (
-            ments.join(F.broadcast(bridge), ments.key == bridge.full_key,
-                       "left")
-            .select(
-                "id", F.coalesce("clean_key", "key").alias("block_key"),
-                "surface"
-            )
+            B.members_broadcast(docs, key_map, id_col="doc_id",
+                                text_col="text", raw_ws=True)
             .groupBy("id", "block_key")
             .agg(F.min("surface").alias("surface"))
         )

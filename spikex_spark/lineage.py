@@ -172,11 +172,14 @@ def run_stage(spark: SparkSession, ledger_dir: str, stage: str,
               input_fingerprint: str | None = None,
               bucket_by: list[str] | None = None,
               num_buckets: int | None = None,
-              sort_by: list[str] | None = None) -> DataFrame:
+              sort_by: list[str] | None = None,
+              columns: list[str] | None = None) -> DataFrame:
     """Execute (or resume) one pipeline stage.
 
     ``build`` constructs the stage DataFrame lazily; it only runs when the
     stage is not already COMPLETE for the same input fingerprint.
+    ``columns``: the layout the caller reads; a COMPLETE stage stored with
+    other columns (written by an older stage definition) is recomputed.
 
     ``bucket_by``: write the stage hash-bucketed (and per-bucket sorted by
     ``sort_by``) so every consumer whose distribution is a superset of the
@@ -192,9 +195,11 @@ def run_stage(spark: SparkSession, ledger_dir: str, stage: str,
     """
     meta = _complete_meta(ledger_dir, stage, input_fingerprint)
     if meta is not None:
-        if meta.get("bucket_by"):
-            return _register_bucketed(spark, ledger_dir, stage, meta)
-        return _read_stage(spark, ledger_dir, stage, meta)
+        out = (_register_bucketed(spark, ledger_dir, stage, meta)
+               if meta.get("bucket_by")
+               else _read_stage(spark, ledger_dir, stage, meta))
+        if columns is None or out.columns == list(columns):
+            return out
     t0 = time.time()
     sc = spark.sparkContext
     # label every job this stage triggers so the UI / REST status API
@@ -304,10 +309,12 @@ def resolve_entities_resumable(spark: SparkSession, pages: DataFrame,
                                text_col: str = "text",
                                cfg=None) -> DataFrame:
     """The north-rule title-blocking pipeline split into ledgered stages:
-    10_mentions → 20_blocks → 30_star_edges → 50_clusters. Kill it between
-    stages and rerun — completed stages load from the ledger (on a cluster
-    this is the Iceberg snapshot per stage). Same definition as the
-    one-shot ``pipeline.resolve_entities`` — only the stage runner differs.
+    10_mentions (block members) → 20_blocks → 30_star_edges →
+    50_clusters. Kill it between stages and rerun — completed stages load
+    from the ledger (on a cluster this is the Iceberg snapshot per stage).
+    Same definition as the one-shot ``pipeline.resolve_entities`` — only
+    the stage runner differs. A ``10_mentions`` written in the older
+    per-mention layout is recomputed, never salted.
 
     ``cfg`` (ERConfig) tunes threshold and caps. The ledger holds the
     reduced star-edge stage, never the O(m²) per-block pair enumeration;

@@ -51,6 +51,15 @@ def _norm_tokens(col: F.Column) -> F.Column:
     return F.filter(norm, lambda t: t != "")
 
 
+# a title's qualifiers ("_(company)"); the clean key is the title without them
+_QUALIFIER = r"_\([^)]*\)"
+
+
+def _key_expr(col: F.Column) -> F.Column:
+    """The key of a title or text: its normalized tokens, space-joined."""
+    return F.array_join(_norm_tokens(col), " ")
+
+
 def title_keys(titles_df: DataFrame, title_col: str = "title") -> DataFrame:
     """Build the blocking-key dimension: one row per (key, title, channel).
 
@@ -61,15 +70,14 @@ def title_keys(titles_df: DataFrame, title_col: str = "title") -> DataFrame:
     * ``full``:  all tokens of the title including the qualifier.
     """
     t = titles_df.select(F.col(title_col).alias("title"))
-    cleaned = F.regexp_replace(F.col("title"), r"_\([^)]*\)", "")
     clean_keys = t.select(
         "title",
-        F.array_join(_norm_tokens(cleaned), " ").alias("key"),
+        _key_expr(F.regexp_replace(F.col("title"), _QUALIFIER, "")).alias("key"),
         F.lit("clean").alias("channel"),
     )
     full_keys = t.select(
         "title",
-        F.array_join(_norm_tokens(F.col("title")), " ").alias("key"),
+        _key_expr(F.col("title")).alias("key"),
         F.lit("full").alias("channel"),
     )
     return (
@@ -77,6 +85,41 @@ def title_keys(titles_df: DataFrame, title_col: str = "title") -> DataFrame:
         .where(F.col("key") != "")
         .dropDuplicates(["key", "title", "channel"])
     )
+
+
+def title_key_pairs(titles_df: DataFrame) -> DataFrame:
+    """(full_key, clean_key) per title, with the expressions of
+    :func:`title_keys`: a narrow projection with no shuffle, so the
+    dictionary probe reads the titles once. Titles whose full key is empty
+    or null are dropped (their clean key is then empty too); a clean key
+    may be empty (an all-qualifier title)."""
+    t = F.col("title")
+    return titles_df.select(
+        _key_expr(t).alias("full_key"),
+        _key_expr(F.regexp_replace(t, _QUALIFIER, "")).alias("clean_key"),
+    ).where(F.col("full_key") != "")
+
+
+def block_key_map(full_keys: list, clean_keys: list) -> dict:
+    """``{key: block keys}`` over every key of :func:`title_keys`, built on
+    the driver from :func:`title_key_pairs` rows, with the semantics of
+    :func:`block_members`' full→clean bridge: a key's block keys are the
+    non-empty clean keys of the titles whose full key it is, or the key
+    itself when there are none.
+
+    The value is that tuple of block keys, sorted, or ``()`` for a key that
+    is its own block key — most keys, and ``()`` is one shared object, so
+    they cost no tuple each in the driver and in every Python worker."""
+    bridge: dict = {}
+    for full, clean in zip(full_keys, clean_keys):
+        if not full:
+            continue
+        bridge.setdefault(full, set())
+        if clean:
+            bridge[full].add(clean)
+            bridge.setdefault(clean, set())
+    return {k: () if v <= {k} else tuple(sorted(v))
+            for k, v in bridge.items()}
 
 
 def title_keys_local(titles: list[str]) -> list[tuple[str, str, str]]:
@@ -92,7 +135,7 @@ def title_keys_local(titles: list[str]) -> list[tuple[str, str, str]]:
     import re
     word_sep = re.compile(_WORD_SEP)
     non_alnum = re.compile(_NON_ALNUM)
-    qualifier = re.compile(r"_\([^)]*\)")
+    qualifier = re.compile(_QUALIFIER)
 
     def norm_key(s: str) -> str:
         toks = (non_alnum.sub("", t.lower()) for t in word_sep.split(s))
@@ -266,9 +309,8 @@ def mentions_broadcast(pages_df: DataFrame, keys: set[str] | list[str],
     """Broadcast-dictionary mention detection (reference strategy (a):
     the Aho-Corasick trie shipped into the matcher, ``wikigraph.py:231-270``).
 
-    The normalized key set rides the UDF closure (Spark broadcasts task
-    binaries; a spaCy-scale 20M-title set would use ``sc.broadcast``); each
-    doc is scanned once in Python per Arrow batch — no join, no window
+    The normalized key set ships once per worker as a broadcast variable;
+    each doc is scanned once in Python per Arrow batch — no join, no window
     shuffle, and identical output to ``mentions`` (the n-gram join path),
     enforced by tests. Use the join path when the dictionary cannot be
     broadcast.
@@ -288,34 +330,73 @@ def mentions_broadcast(pages_df: DataFrame, keys: set[str] | list[str],
     list is already in hand per doc, so containment is a local filter, not
     a join.
     """
+    cols = ["start", "n", "surface", "key"] + (["nested"] if nested else [])
+    return _broadcast_scan(
+        pages_df, frozenset(keys), id_col, text_col, raw_ws,
+        cols, "start int, n int, surface string, key string"
+        + (", nested boolean" if nested else ""),
+        lambda text, keyset, first_tok, split: _scan_doc(
+            text, keyset, first_tok, max_n, split, nested))
+
+
+def members_broadcast(pages_df: DataFrame, key_map: dict,
+                      id_col: str = "url", text_col: str = "extracted",
+                      max_n: int = 4, raw_ws: bool = False) -> DataFrame:
+    """Block members straight from the dictionary scan:
+    ``block_members(mentions_broadcast(pages_df, key_map, ...), keys)`` in
+    one Arrow stage, with no bridge join (reference strategy (a): a trie
+    hit returns its target directly, ``wikigraph.py:195-237``).
+
+    ``key_map`` is :func:`block_key_map` of the titles; each longest match
+    emits one row per block key of its matched key. Output:
+    (id, block_key, surface), deduped per doc. An id that repeats across
+    input rows can repeat a member; ``block_members`` dedups globally, so a
+    caller wanting its exact rows adds ``dropDuplicates``."""
+    def doc_members(text, keys, first_tok, split):
+        members = {}
+        for _, _, surface, key in _scan_doc(text, keys, first_tok, max_n,
+                                            split):
+            for block_key in keys[key] or (key,):
+                members[(block_key, surface)] = None
+        return members
+
+    return _broadcast_scan(
+        pages_df, key_map, id_col, text_col, raw_ws,
+        ["block_key", "surface"], "block_key string, surface string",
+        doc_members,
+    )
+
+
+def _broadcast_scan(pages_df: DataFrame, keys, id_col: str, text_col: str,
+                    raw_ws: bool, cols: list[str], schema: str,
+                    doc_rows) -> DataFrame:
+    """The Arrow stage of the broadcast scans: ``keys`` (a key set or a
+    key map) ships once as a broadcast variable, and
+    ``doc_rows(text, keys, first_tok, split)`` gives one doc's output rows
+    (the ``cols`` after ``id``)."""
     import pandas as pd
 
     # explicit broadcast: a closure-captured set is re-pickled and re-shipped
     # with EVERY task (128 tasks × MBs of keys); a broadcast variable is
     # fetched and unpickled once per worker process
     sc = pages_df.sparkSession.sparkContext
-    bkeys = sc.broadcast(frozenset(keys))
-    out_schema = (
-        f"id {pages_df.schema[id_col].dataType.simpleString()},"
-        " start int, n int, surface string, key string"
-        + (", nested boolean" if nested else "")
-    )
-
+    bkeys = sc.broadcast(keys)
+    out_schema = (f"id {pages_df.schema[id_col].dataType.simpleString()}, "
+                  + schema)
     split = _re_split_raw_ws if raw_ws else _re_split
-    cols = ["id", "start", "n", "surface", "key"] + (["nested"] if nested else [])
 
     def run(batches):
         keyset = bkeys.value
+        # memoised on the broadcast value: once per worker, not per task
         first_tok = _first_token_index(keyset)
         for pdf in batches:
-            rows = {c: [] for c in cols}
+            rows = {c: [] for c in ["id", *cols]}
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
                     continue
-                for m in _scan_doc(text, keyset, first_tok, max_n, split,
-                                   nested):
+                for r in doc_rows(text, keyset, first_tok, split):
                     rows["id"].append(did)
-                    for c, v in zip(cols[1:], m):
+                    for c, v in zip(cols, r):
                         rows[c].append(v)
             yield pd.DataFrame(rows)
 
@@ -439,6 +520,11 @@ def block_members(mentions_df: DataFrame, title_keys_df: DataFrame) -> DataFrame
     A mention matched on the full channel ("apple company") still blocks
     under the clean key ("apple") — company/fruit pages must meet in one
     block to be scored apart. Output: (id, block_key, surface).
+
+    The pipeline uses this bridge join only on its join branch, for a
+    dictionary too big to broadcast; the broadcast branch maps keys inside
+    the scan (:func:`members_broadcast` over :func:`block_key_map`), and
+    this function is the reference that scan is tested against.
     """
     # full key -> clean key bridge (per title), distinct to avoid fanout
     bridge = (

@@ -66,16 +66,41 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _canon(linked)
 
 
-# Driver-path bound, in EDGES (the collect is bounded at threshold+1 rows
-# by construction — `limit(threshold+1).toArrow()`). Memory math for 8M:
-# int64 ids = 8M x 2 x 8 B = 256 MB Arrow (+~2x for the dictionary-encode
-# scratch); ~32 B string ids = ~768 MB — single-digit-GB driver headroom
-# either way, and the distributed large-star/small-star path still takes
-# over above it. Raised from 2M after an A/B on a real 2.2M-edge match
-# graph (200k-doc corpus): distributed 9.4 s vs Arrow union-find 1.6 s,
-# identical assignments (diff: 0) — below ~10M edges the per-round
-# shuffles + checkpoints are pure overhead.
+# Driver-path ceiling, in EDGES (the collect is bounded at threshold+1 rows
+# by construction — `limit(threshold+1).toArrow()`). Raised from 2M after
+# an A/B on a real 2.2M-edge match graph (200k-doc corpus): distributed
+# 9.4 s vs Arrow union-find 1.6 s, identical assignments (diff: 0) — below
+# ~10M edges the per-round shuffles + checkpoints are pure overhead.
 SMALL_GRAPH_EDGES = 8_000_000
+
+# The bound under the ceiling comes from the driver heap
+# (``driver_edge_bound``): the edge collect may take DRIVER_HEAP_SHARE of
+# it, and each edge holds its two ids DRIVER_COPIES times over (the JVM's
+# collected Arrow batches, the Python copy, the dictionary-encode scratch).
+# A string id counts STRING_ID_BYTES (~32 B of data + its offset); a
+# fixed-width id its width. 8M bigint edges = 384 MB, 8M string edges =
+# 1.7 GB: too much for a default 1g driver, which now keeps the distributed
+# large-star/small-star path for them.
+DRIVER_HEAP_SHARE = 0.25
+DRIVER_COPIES = 3
+STRING_ID_BYTES = 36
+_ID_BYTES = {"tinyint": 1, "smallint": 2, "int": 4, "date": 4, "float": 4,
+             "bigint": 8, "double": 8, "timestamp": 8, "timestamp_ntz": 8}
+
+
+def driver_edge_bound(heap_bytes: int, id_type) -> int:
+    """The most edges the CC driver path may collect on a driver with
+    ``heap_bytes`` of heap, for ids of Spark type ``id_type``: at most
+    ``SMALL_GRAPH_EDGES``. E.g. a 1 GiB heap holds 5.6M bigint edges but
+    only 1.2M string edges; 8M string edges need a 6.4 GiB heap."""
+    width = _ID_BYTES.get(id_type.simpleString(), STRING_ID_BYTES)
+    fit = int(heap_bytes * DRIVER_HEAP_SHARE) // (2 * width * DRIVER_COPIES)
+    return min(SMALL_GRAPH_EDGES, fit)
+
+
+def _driver_heap_bytes(spark) -> int:
+    """The driver JVM's maximum heap: one py4j call, no Spark job."""
+    return spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
 
 
 def _propagate_labels(ia, ib, n_nodes):
@@ -142,7 +167,7 @@ def _arrow_components(tbl) -> "tuple":
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 25,
-                         small_graph_threshold: int = SMALL_GRAPH_EDGES) -> DataFrame:
+                         small_graph_threshold: int | None = None) -> DataFrame:
     """Return (id, component) — component = min node id reachable.
 
     Adaptive physical strategy: the match-edge graph after blocking+scoring
@@ -153,9 +178,14 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     Above the threshold the O(log n)-round distributed algorithm runs.
     ``edges`` may use any orderable id type; isolated nodes don't appear
     (callers union them back with component = own id).
+    ``small_graph_threshold`` defaults to ``driver_edge_bound`` of the
+    driver's heap and the id type.
     """
     spark = edges.sparkSession
     e = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    if small_graph_threshold is None:
+        small_graph_threshold = driver_edge_bound(
+            _driver_heap_bytes(spark), e.schema["a"].dataType)
     # ONE job decides the strategy AND loads the small-graph edges:
     # limit(threshold+1).toArrow() returns every edge when the graph is
     # small (the common case) — the previous checkpoint + count() + collect

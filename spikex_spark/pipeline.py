@@ -3,12 +3,16 @@
 The flagship query (BASELINE.json north_rule). Composable: every stage is a
 ``DataFrame -> DataFrame`` transform, so Catalyst sees ONE logical plan and
 can push filters/pruning across stage boundaries; the only Python stages are
-the byte-identical extractor and the Jaro-Winkler scorer (both Arrow).
+the byte-identical extractor (fused into the dictionary scan on the
+broadcast path) and the Jaro-Winkler scorer (both Arrow).
 
 Two entry points:
 
 * ``resolve_entities``   — title-key blocking over a `pages`-shaped table
   (url, text, ...) against a `titles` dimension; the reference-parity path.
+  The titles are read once: one narrow probe collects their keys, and the
+  broadcast dictionary scan emits block members (``10_mentions``) with no
+  join afterwards (reference strategy (a), ``wikigraph.py:195-237``).
   Its one edge path is the star-collapsed edge set (``_star_edges``): the
   O(m²) per-block pair enumeration is built only for the pairwise view
   (``scored_pairs``), never for clustering.
@@ -143,64 +147,90 @@ class ERConfig:
     ledger_min_bytes: int = 256 << 20
 
 
-def _mentions(pages: DataFrame, keys: DataFrame, cfg: ERConfig,
+# the layout of the 10_mentions stage: block members, one row per distinct
+# (id, block_key, surface)
+MEMBER_COLUMNS = ["id", "block_key", "surface"]
+
+
+def _mentions(pages: DataFrame, titles: DataFrame, cfg: ERConfig,
               id_col: str, text_col: str) -> DataFrame:
-    # ONE Arrow job decides the strategy AND loads the dictionary: pull at
-    # most max+1 keys via limit().toArrow() — py4j row collect() serialized
-    # up to 2M rows one at a time and needed a separate count() job first
-    # (the pathology operators/cc.py documents and avoids the same way).
-    # toArrow, not toPandas: building a pandas object column for millions
-    # of strings costs ~4-5s of pure driver time (table_to_dataframe) that
-    # to_pylist skips — this is serial time executors spend idle on.
-    distinct_keys = keys.select("key").distinct()
-    head = distinct_keys.limit(cfg.broadcast_keys_max + 1).toArrow()
+    """(id, block_key, surface) block members of ``pages`` against the
+    ``titles`` dictionary (a ``title`` column): each longest dictionary
+    match, mapped to the clean keys of its titles (``B.block_members``).
+
+    ONE narrow Arrow collect decides the strategy AND loads the dictionary:
+    the per-title (full_key, clean_key) pairs, at most
+    ``broadcast_keys_max + 1`` rows, so the titles are read once. A
+    dictionary that fits (at most ``broadcast_keys_max`` titles and keys)
+    becomes the driver-built key → block-key map (``B.block_key_map``),
+    and the fused extract + scan emits block members directly
+    (``B.members_broadcast``): no title-key table, no bridge join. A
+    bigger one takes the n-gram join path and the bridge join."""
+    # toArrow, not collect()/toPandas: py4j row collect serialized up to 2M
+    # rows one at a time, and a pandas object column for millions of
+    # strings costs seconds of pure driver time that to_pylist skips
+    head = (B.title_key_pairs(titles)
+            .limit(cfg.broadcast_keys_max + 1).toArrow())
     if head.num_rows <= cfg.broadcast_keys_max:
-        # FUSED extract+scan: raw text crosses the Arrow boundary once
-        # (raw_ws tokenization ≡ extract(ws→_) + split, proven by test)
-        return B.mentions_broadcast(pages, head.column("key").to_pylist(),
-                                    id_col=id_col, text_col=text_col,
-                                    max_n=cfg.max_ngram, raw_ws=True)
+        key_map = B.block_key_map(head.column("full_key").to_pylist(),
+                                  head.column("clean_key").to_pylist())
+        if len(key_map) <= cfg.broadcast_keys_max:
+            # FUSED extract+scan: raw text crosses the Arrow boundary once
+            # (raw_ws tokenization ≡ extract(ws→_) + split, proven by test);
+            # ids may repeat across rows, so dedup globally as
+            # block_members does
+            return B.members_broadcast(
+                pages, key_map, id_col=id_col, text_col=text_col,
+                max_n=cfg.max_ngram, raw_ws=True,
+            ).dropDuplicates(MEMBER_COLUMNS)
+    keys = B.title_keys(titles)
     extracted = extract_stage(pages.select(id_col, text_col), text_col)
     # broadcast_keys=False: this branch exists BECAUSE the dictionary exceeds
     # broadcast_keys_max — forcing F.broadcast() here would override AQE's
     # size check and OOM at wiki scale (~20M keys). The shuffle-join path's
     # first-token prefilter engages instead.
-    return B.mentions(extracted, keys, id_col=id_col, text_col="extracted",
-                      max_n=cfg.max_ngram, broadcast_keys=False)
+    return B.block_members(
+        B.mentions(extracted, keys, id_col=id_col, text_col="extracted",
+                   max_n=cfg.max_ngram, broadcast_keys=False),
+        keys)
 
 
 def _er_stage_results(pages: DataFrame, titles: DataFrame, cfg: ERConfig,
                       id_col: str, text_col: str, run,
                       prior_members: DataFrame | None = None
                       ) -> DataFrame:
-    """Shared front half (mentions → salted blocks) behind a
+    """Shared front half (block members → salted blocks) behind a
     ``run(name, build)`` hook: identity for the one-shot path,
     ``lineage.run_stage`` for the ledgered/resumable path — ONE definition
     of the flagship pipeline, two physical execution modes. Returns the
     salted blocks; clustering (``cluster_from_blocks``) and the pairwise
     view (``scored_pairs``) both start from them.
 
+    ``10_mentions`` holds the block members (``MEMBER_COLUMNS``) from
+    ``_mentions``; ``20_blocks`` salts them. A ledger whose COMPLETE
+    ``10_mentions`` has another layout (the older per-mention
+    ``(id, start, n, surface, key)`` rows) recomputes it.
+
     ``prior_members``: (id, block_key, surface) block members of an already
     resolved corpus (``lineage.resolve_entities_incremental``). Only
     ``pages`` are scanned; the prior members join the union BEFORE salting,
     because block sizes — hence salts and caps — change under the union."""
-    keys = B.title_keys(titles)
-    ments = run(
+    members = run(
         "10_mentions",
-        lambda: _mentions(pages.select(id_col, text_col), keys, cfg,
+        lambda: _mentions(pages.select(id_col, text_col), titles, cfg,
                           id_col, text_col),
+        columns=MEMBER_COLUMNS,
     )
 
     def _blocks() -> DataFrame:
-        members = B.block_members(ments, keys)
-        if prior_members is not None:
-            members = prior_members.unionByName(members)
+        union = (members if prior_members is None
+                 else prior_members.unionByName(members))
         # blocks feed block_sizes, both sides of the pair self-join, and the
         # surface lookup — checkpoint the members once instead of
         # recomputing the whole extract→mention chain per consumer (the
         # ledgered runner additionally persists the salted result)
         return B.salt_blocks(
-            members.localCheckpoint(),  # eager: lazy+AQE showed unstable re-plans
+            union.localCheckpoint(),  # eager: lazy+AQE showed unstable re-plans
             cap=cfg.block_cap, nsalt=cfg.nsalt,
         )
 
@@ -274,8 +304,8 @@ def resolve_entities(pages: DataFrame, titles: DataFrame,
                      stage_runner=None) -> DataFrame:
     """(url, cluster_id, block_key, surface) — entity clusters over pages.
 
-    Stages: ``10_mentions`` → ``20_blocks`` (salted) → ``30_star_edges``
-    → ``50_clusters``. The one edge path is the star-collapsed edge set
+    Stages: ``10_mentions`` (block members, ``MEMBER_COLUMNS``) →
+    ``20_blocks`` (salted) → ``30_star_edges`` → ``50_clusters``. The one edge path is the star-collapsed edge set
     (``_star_edges``), whose components equal those of the full per-block
     pair enumeration; that enumeration is never built here.
 

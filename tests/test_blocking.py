@@ -115,6 +115,98 @@ def test_block_members_maps_full_to_clean_key(spark, titles_df):
     assert ("u1", "apple") in got and ("u2", "apple") in got
 
 
+def _driver_key_map(titles) -> dict:
+    """The pipeline's driver-built key → block-keys map, expanded: every
+    key to the set of its block keys."""
+    head = B.title_key_pairs(titles).toArrow()
+    m = B.block_key_map(head.column("full_key").to_pylist(),
+                        head.column("clean_key").to_pylist())
+    return {k: set(v or (k,)) for k, v in m.items()}
+
+
+def _bridge_key_map(titles) -> dict:
+    """Reference: title_keys plus block_members' full→clean bridge, applied
+    to one mention of every key."""
+    keys = B.title_keys(titles)
+    every_key = keys.select(F.col("key").alias("id"), "key",
+                            F.col("key").alias("surface")).distinct()
+    out: dict = {}
+    for r in B.block_members(every_key, keys).collect():
+        out.setdefault(r["id"], set()).add(r["block_key"])
+    return out
+
+
+_TITLE_TOKENS = ["apple", "Apple", "APPLE", "inc", "Inc.", "new", "York",
+                 "café", "Ünïcode", "ß", "x", "42", "", "-"]
+_QUALIFIERS = ["_(company)", "_(fruit)", "_(x)", "_(y)", "_(Apple)", "_()",
+               "_(é)"]
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(
+    st.one_of(st.none(), st.builds(
+        lambda toks, quals: "_".join(toks) + "".join(quals),
+        st.lists(st.sampled_from(_TITLE_TOKENS), max_size=3),
+        st.lists(st.sampled_from(_QUALIFIERS), max_size=2))),
+    max_size=10))
+@example(["Apple_(company)", "Apple_(fruit)", "Apple", "apple_(Company)",
+          "C_(x)_(y)", "C_x_y", "_(x)", "_(x)_(y)", "Apple_(company)",
+          None, "Café_(x)", "Über_Straße"])
+@example(["_(only)", "Only", None, None])
+@example([])
+def test_block_key_map_equals_title_keys_bridge(spark, titles):
+    """The driver-built key → block-key map equals title_keys plus the
+    block_members bridge: qualifiers, several qualifiers, all-qualifier
+    titles (empty clean key), duplicates, mixed case, non-ASCII letters
+    and null titles."""
+    df = spark.createDataFrame([(t,) for t in titles], "title string")
+    assert _driver_key_map(df) == _bridge_key_map(df)
+
+
+def test_block_key_map_value_shapes():
+    """A key blocks under itself unless its titles' clean keys say
+    otherwise; ``()`` stands for the key itself."""
+    m = B.block_key_map(["apple company", "apple fruit", "apple", "c x y",
+                         "x"],
+                        ["apple", "apple", "apple", "c", ""])
+    assert m == {"apple company": ("apple",), "apple fruit": ("apple",),
+                 "apple": (), "c x y": ("c",), "c": (), "x": ()}
+    # a full key shared by titles with different clean keys blocks under
+    # all of them
+    m = B.block_key_map(["a b", "a b", "a b"], ["a", "b", "a b"])
+    assert m == {"a b": ("a", "a b", "b"), "a": (), "b": ()}
+
+
+def test_members_broadcast_equals_block_members(spark, pages_df,
+                                                titles_df):
+    """The fused scan's block members equal block_members over the
+    broadcast mention scan on the synth corpus plus two pages whose url
+    repeats an existing one (same and other text): as a set, and row for
+    row once deduped across rows."""
+    pages = pages_df.select("url", "text")
+    first = (pages.where(F.lower("text").contains("apple (company)"))
+             .orderBy("url").first())
+    pages = pages.unionByName(spark.createDataFrame(
+        [tuple(first), (first["url"], "Apple (fruit) and Apple (company)")],
+        pages.schema))
+    keys = B.title_keys(titles_df)
+    keyset = [r["key"] for r in keys.select("key").distinct().collect()]
+    want = B.block_members(
+        B.mentions_broadcast(pages, keyset, "url", "text", raw_ws=True), keys)
+    head = B.title_key_pairs(titles_df).toArrow()
+    key_map = B.block_key_map(head.column("full_key").to_pylist(),
+                              head.column("clean_key").to_pylist())
+    got = B.members_broadcast(pages, key_map, "url", "text", raw_ws=True)
+    assert got.columns == ["id", "block_key", "surface"]
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+    assert rows(got.dropDuplicates()) == rows(want) and rows(want)
+    # one scan row per doc and member: only the repeated url repeats
+    dup = [r for r in rows(got) if r[0] == first["url"]]
+    assert len(rows(got)) - len(rows(want)) == len(dup) - len(set(dup)) > 0
+    # full-channel matches block under their clean key
+    assert (first["url"], "apple", "Apple (company)") in rows(got)
+
+
 def test_salt_blocks_deterministic_and_capped(spark):
     rows = [(f"id{i:03d}", "hot") for i in range(50)] + [("idX", "cold")]
     blocks = spark.createDataFrame(rows, ["id", "block_key"])

@@ -194,3 +194,52 @@ def test_refine_oversized_isolated_members_become_singletons(spark):
            for r in refine_oversized(clusters, strong, max_size=2)
            .collect()}
     assert got == {1: 1, 2: 1, 3: 3, 4: 4}
+
+
+def test_driver_edge_bound_follows_heap_and_id_width():
+    """The CC driver path collects at most a quarter of the driver heap
+    (three copies of two ids per edge), never more than
+    SMALL_GRAPH_EDGES; string ids get fewer edges than long ids."""
+    from pyspark.sql import types as T
+
+    from spikex_spark.operators.cc import (
+        DRIVER_COPIES,
+        SMALL_GRAPH_EDGES,
+        STRING_ID_BYTES,
+        driver_edge_bound,
+    )
+
+    gib = 1 << 30
+    assert driver_edge_bound(gib, T.LongType()) == 5_592_405
+    assert driver_edge_bound(gib, T.StringType()) == 1_242_756
+    assert driver_edge_bound(gib, T.IntegerType()) == SMALL_GRAPH_EDGES
+    for dt, width in ((T.LongType(), 8), (T.StringType(), STRING_ID_BYTES)):
+        assert driver_edge_bound(64 * gib, dt) == SMALL_GRAPH_EDGES
+        assert driver_edge_bound(0, dt) == 0
+        for heap in (gib // 2, gib, 2 * gib, 3 * gib):
+            n = driver_edge_bound(heap, dt)
+            assert n * 2 * width * DRIVER_COPIES <= heap // 4
+            assert n == SMALL_GRAPH_EDGES or \
+                (n + 1) * 2 * width * DRIVER_COPIES > heap // 4
+    assert driver_edge_bound(2 * gib, T.StringType()) < \
+        driver_edge_bound(2 * gib, T.LongType())
+
+
+def test_small_driver_heap_takes_distributed_path(spark, monkeypatch):
+    """A graph over the heap-derived bound runs the distributed rounds,
+    not the driver collect, and gives the same components."""
+    from spikex_spark.operators import cc as CC
+
+    rng = random.Random(11)
+    edges = [(f"n{rng.randint(0, 80)}", f"n{rng.randint(0, 80)}")
+             for _ in range(120)]
+    e = spark.createDataFrame(edges, ["src", "dst"])
+    want = {tuple(r) for r in CC.connected_components(e).collect()}
+
+    def no_driver_path(tbl):
+        raise AssertionError("driver path taken over the heap bound")
+
+    monkeypatch.setattr(CC, "_driver_heap_bytes", lambda spark: 1 << 12)
+    monkeypatch.setattr(CC, "_arrow_components", no_driver_path)
+    assert CC.driver_edge_bound(1 << 12, e.schema["src"].dataType) < 100
+    assert {tuple(r) for r in CC.connected_components(e).collect()} == want

@@ -1,6 +1,7 @@
-"""The ledgered document pipeline's fixed per-job and per-task costs: the
-stage ledger's lineage evidence and schema come without Spark jobs of their
-own, and Arrow-Python stages run in one wave of tasks."""
+"""The pipelines' fixed per-job and per-task costs: the stage ledger's
+lineage evidence and schema come without Spark jobs of their own, the
+entity pipeline reads its titles in one job, and Arrow-Python stages run in
+one wave of tasks."""
 
 from __future__ import annotations
 
@@ -81,6 +82,59 @@ def test_incremental_run_has_no_schema_or_counter_jobs(spark, tmp_path):
         assert meta["rows"] == _stage_rows(spark, led_new, stage), stage
         assert sum(p["rows"] for p in meta["partitions"]) == meta["rows"]
         assert meta["schema_ddl"]
+
+
+# jobs of one warm in-plan resolve_entities run over the synth fixture,
+# result collect included (24 before the dictionary scan emitted block
+# members: 9 of them read the titles)
+ENTITY_RUN_JOBS = 17
+
+
+def _jobs_reading(spark, jobs: list, read_schema: str) -> list:
+    """The ``jobs`` of SQL executions whose plan scans a file table with
+    ``read_schema``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        ids = ex.jobs().keys().toSeq()
+        ex_jobs = {ids.apply(j) for j in range(ids.size())}
+        if (ex_jobs & set(jobs)
+                and f"ReadSchema: {read_schema}" in
+                ex.physicalPlanDescription()):
+            out += sorted(ex_jobs & set(jobs))
+    return out
+
+
+def test_entity_run_job_budget(spark, tmp_path):
+    """One warm in-plan resolve_entities run: at most ENTITY_RUN_JOBS
+    Spark jobs, and exactly one of them (the dictionary probe) reads the
+    titles table."""
+    from spikex_spark import synth
+    from spikex_spark.pipeline import resolve_entities, run_inplan
+
+    # one file each: the input partitioning, and with it how AQE splits
+    # the run into jobs, does not follow the machine's task slots
+    spark.createDataFrame(synth.gen_pages(120)).coalesce(1).write.parquet(
+        str(tmp_path / "pages"))
+    spark.createDataFrame(synth.gen_titles()).coalesce(1).write.parquet(
+        str(tmp_path / "titles"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    titles = spark.read.parquet(str(tmp_path / "titles"))
+    want = resolve_entities(pages, titles, stage_runner=run_inplan).toArrow()
+    sc = spark.sparkContext
+    sc.addJobTag("entity-budget")
+    try:
+        got = resolve_entities(pages, titles,
+                               stage_runner=run_inplan).toArrow()
+    finally:
+        sc.removeJobTag("entity-budget")
+    jobs = _tagged_jobs(spark, "entity-budget")
+    assert 0 < len(jobs) <= ENTITY_RUN_JOBS, jobs
+    assert len(_jobs_reading(spark, [j for j, _ in jobs],
+                             "struct<title:string>")) == 1
+    assert got.sort_by("url").equals(want.sort_by("url"))
 
 
 def test_empty_stage_records_zero_rows(spark, tmp_path):

@@ -78,27 +78,36 @@ def test_large_dict_fallback_uses_shuffle_join(spark, pages_df, titles_df,
     """When the dictionary exceeds broadcast_keys_max, _mentions must take
     the n-gram JOIN path with broadcast_keys=False — the forced-broadcast
     hint would override AQE's size check on exactly the table that is too
-    big to broadcast (the round-2 advice finding)."""
+    big to broadcast (the round-2 advice finding). Both branches give the
+    same block members."""
     from spikex_spark.operators import blocking as B
-    from spikex_spark.pipeline import ERConfig, _mentions
+    from spikex_spark.pipeline import MEMBER_COLUMNS, ERConfig, _mentions
 
-    captured = {}
+    captured = []
     real = B.mentions
 
     def spy(*args, **kwargs):
-        captured.update(kwargs)
+        captured.append(kwargs)
         return real(*args, **kwargs)
 
     monkeypatch.setattr(B, "mentions", spy)
-    keys = B.title_keys(titles_df)
+    pages = pages_df.select("url", "text")
     cfg = ERConfig(broadcast_keys_max=0)   # force the fallback branch
-    out = _mentions(pages_df.select("url", "text"), keys, cfg, "url", "text")
-    assert captured.get("broadcast_keys") is False
-    # and the fallback output matches the broadcast-scan path
-    fused = _mentions(pages_df.select("url", "text"), keys,
-                      ERConfig(), "url", "text")
-    assert ({tuple(r) for r in out.collect()}
-            == {tuple(r) for r in fused.collect()})
+    out = _mentions(pages, titles_df, cfg, "url", "text")
+    assert [c.get("broadcast_keys") for c in captured] == [False]
+    # and the fallback's members match the broadcast scan's, row for row
+    captured.clear()
+    fused = _mentions(pages, titles_df, ERConfig(), "url", "text")
+    assert captured == []
+    assert out.columns == fused.columns == MEMBER_COLUMNS
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+    assert rows(out) == rows(fused) and rows(fused)
+    # as many titles as the bound but more keys (a qualified title has a
+    # full and a clean key): the join branch too
+    two = spark.createDataFrame([("Apple_(company)",), ("Apple_(fruit)",)],
+                                "title string")
+    _mentions(pages, two, ERConfig(broadcast_keys_max=2), "url", "text")
+    assert [c.get("broadcast_keys") for c in captured] == [False]
 
 
 def test_hard_entity_variants_all_emitted_and_matched(spark, pages_df,

@@ -716,6 +716,36 @@ def test_resume_after_midpipeline_kill(spark, tmp_path, pages_df, titles_df):
                      "50_clusters"]
 
 
+@pytest.mark.parametrize("with_ddl", [True, False])
+def test_old_mentions_layout_is_recomputed(spark, tmp_path, pages_df,
+                                           titles_df, with_ddl):
+    """A ledger whose COMPLETE 10_mentions holds the older per-mention
+    layout (id, start, n, surface, key) recomputes that stage as block
+    members instead of salting it, and finishes to the one-shot result."""
+    from spikex_spark import lineage
+    from spikex_spark.pipeline import MEMBER_COLUMNS, resolve_entities
+
+    ledger = str(tmp_path / "old_layout")
+    ddl = "id string, start int, n int, surface string, key string"
+    spark.createDataFrame([("u1", 1, 1, "Apple", "apple")], ddl) \
+        .write.parquet(lineage._data_path(ledger, "10_mentions"))
+    meta = {"stage": "10_mentions", "status": "COMPLETE", "rows": 1,
+            "partitions": [{"partition": 0, "rows": 1}],
+            "input_fingerprint": "fp"}
+    if with_ddl:
+        meta["schema_ddl"] = ddl
+    lineage._lineage_path(ledger, "10_mentions").write_text(json.dumps(meta))
+
+    res = lineage.resolve_entities_resumable(spark, pages_df, titles_df,
+                                             ledger, fingerprint="fp")
+    key = lambda df: {(r["url"], r["cluster_id"]) for r in df.collect()}
+    assert key(res) == key(resolve_entities(pages_df, titles_df))
+    stored = spark.read.parquet(lineage._data_path(ledger, "10_mentions"))
+    assert stored.columns == MEMBER_COLUMNS
+    assert [m["stage"] for m in lineage.ledger_summary(ledger)] == [
+        "10_mentions", "20_blocks", "30_star_edges", "50_clusters"]
+
+
 def test_ppm_16bit_and_scaled_maxval():
     import numpy as np
 

@@ -133,11 +133,10 @@ elif workload == "scoring":
         df.select(F.sum(jaro_winkler_udf("a", "b"))).collect()
 elif workload == "dump":
     # S1 source path at scale: multi-part .sql.gz dumps -> read_wiki_dump
-    # (mapInPandas parse) -> build_wikigraph -> title keys -> mention scan
-    # over a FIXED 100k-page corpus. gzip members are unsplittable, so the
+    # (mapInPandas parse) -> build_wikigraph -> block members (title-key
+    # probe, mention join, bridge) over a FIXED 100k-page corpus. gzip members are unsplittable, so the
     # part count (32) is the parallelism — exactly the cluster shape.
     from spikex_spark import synth
-    from spikex_spark.operators import blocking as B
     from spikex_spark.pipeline import ERConfig, _mentions
     from spikex_spark.sources import read_wiki_dump
     from spikex_spark.wikigraph import build_wikigraph
@@ -159,8 +158,8 @@ elif workload == "dump":
                            "redirect"),
             read_wiki_dump(spark, dump_dir + "/categorylinks-*.sql.gz",
                            "categorylinks"))
-        keys = B.title_keys(g.pages).localCheckpoint()
-        _mentions(corpus, keys, cfg, "url", "text").count()
+        titles = g.pages.select("title").localCheckpoint()
+        _mentions(corpus, titles, cfg, "url", "text").count()
 else:
     raise SystemExit(f"unknown workload {{workload}}")
 
